@@ -5,13 +5,37 @@ partitioned parquet/Delta dataset; ``spark.read.parquet`` on a directory
 is the same code path, so nothing here changes at scale — column
 pruning and predicate pushdown reach the scan automatically because
 every query in this library projects/filters declaratively.
+
+Schema map. A table file is a replayable log whose layout is fixed once
+it is written, yet ``spark.read.parquet`` infers its schema again on
+every read, and in Spark 4.1 that inference is one Spark job. This
+module therefore remembers the schema Spark inferred for each local
+regular file, keyed by the file's identity ``(path, st_ino,
+st_mtime_ns, st_size)``, and later reads pass it back with
+``spark.read.schema(...)``: no job, and still a fresh relation per call
+(a self-join needs distinct attributes, so a DataFrame is never
+shared). A rewrite — in place or tmp+rename — changes the identity and
+the next read infers again. Directories, remote URIs and missing paths
+bypass the map and read exactly as without it. The map is
+process-wide and guarded by a lock; it holds one entry per path.
+
+The map stores what Spark inferred, not the declared schemas in
+FIXTURES.md, because ``events.ts`` has two on-disk encodings
+(TIMESTAMP(NANOS), read as long under ``nanosAsLong``, and
+TIMESTAMP_NTZ micros) and ``normalize_events_ts`` must see which one
+the file holds. ``nanosAsLong`` is the only inference conf the package
+relies on, and ``ensure_nanos_conf`` runs before every ``events`` read,
+so a cached schema always agrees with the read that uses it.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -78,10 +102,49 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+_SCHEMAS: dict[str, tuple[tuple[int, int, int], StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple[int, int, int] | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of a local regular file, else None."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A fresh parquet relation over ``path``, inferring its schema only
+    when the schema map has none for the file as it is now."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[path] = (ident, df.schema)
+    return df
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The on-disk schema of table ``name``, before any normalisation
+    (a streaming read of the table's files declares it)."""
+    if name == "events":
+        ensure_nanos_conf(spark)
+    return _read_parquet(spark, table_path(sf_dir, name)).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         ensure_nanos_conf(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
     return df

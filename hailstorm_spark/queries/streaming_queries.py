@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from hailstorm_spark.functions.localframe import local_df
 from hailstorm_spark.functions.text import tokens, tokens_sql
-from hailstorm_spark.io import ensure_nanos_conf, normalize_events_ts, table_path
+from hailstorm_spark.io import load_table, normalize_events_ts, table_path, table_schema
 from hailstorm_spark.registry import register
 from hailstorm_spark.streaming.bolt import streaming_word_counts
 
@@ -142,7 +142,7 @@ def streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet file stream → count bolt (update-mode state store) →
     memory sink, drained with availableNow. Counts must equal the
     batch oracle — the exactly-once argument in one query."""
-    docs_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    docs_schema = table_schema(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs_schema).parquet(_stream_dir(sf_dir, "documents"))
     words = stream.select(F.explode(tokens("text")).alias("word"))
     return _drain_to_memory(streaming_word_counts(words), spark, "complete")
@@ -178,7 +178,7 @@ def _register_streaming_topk_file_sink() -> None:
         column)."""
         from hailstorm_spark.streaming.sinks import topk_file_sink
 
-        docs_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+        docs_schema = table_schema(spark, sf_dir, "documents")
         stream = spark.readStream.schema(docs_schema).parquet(
             _stream_dir(sf_dir, "documents")
         )
@@ -258,8 +258,7 @@ def events_stream(
     semantics and the pushdown traps). Watermarks stay with the caller:
     their column and placement are part of each query's plan.
     """
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = table_schema(spark, sf_dir, "events")
     if flush_beyond_minutes is None:
         d = _stream_dir(sf_dir, "events")
     else:
@@ -450,7 +449,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hailstorm_spark.streaming.bolt import streaming_exact_dedup
 
-    docs_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    docs_schema = table_schema(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs_schema).parquet(_stream_dir(sf_dir, "documents"))
     digests = stream.select(F.md5("text").alias("text_hash"))
     return _drain_to_memory(streaming_exact_dedup(digests, ["text_hash"]), spark, "append")
@@ -619,7 +618,7 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hailstorm_spark.operators.text import quality_score
     from hailstorm_spark.streaming.bolt import streaming_exact_dedup
 
-    docs_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    docs_schema = table_schema(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs_schema).parquet(_stream_dir(sf_dir, "documents"))
     cleaned = stream.filter(quality_score("text") > 0.5).select(
         F.md5("text").alias("text_hash")
@@ -651,7 +650,7 @@ def streaming_monoid_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hailstorm_spark.streaming.bolt import stateful_bolt
 
-    docs_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    docs_schema = table_schema(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs_schema).parquet(_stream_dir(sf_dir, "documents"))
     words = stream.select(F.explode(tokens("text")).alias("word"))
     out = stateful_bolt(
@@ -687,8 +686,7 @@ def streaming_union_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/Hailstorm/Topology/HardcodedTopology.hs:19,29-42): two distinct
     event streams union into one counting bolt on the streaming engine.
     """
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = table_schema(spark, sf_dir, "events")
     d = _stream_dir(sf_dir, "events")
 
     def side(event_type: str) -> DataFrame:
@@ -721,11 +719,9 @@ def streaming_enrich_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs. The static side broadcasts per micro-batch; no
     watermark needed (static tables never add state).
     """
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = table_schema(spark, sf_dir, "events")
     d = _stream_dir(sf_dir, "events")
     from hailstorm_spark.functions.decimal import dsum, money
-    from hailstorm_spark.io import load_table
 
     stream = (
         spark.readStream.schema(schema)
@@ -1514,7 +1510,6 @@ def _register_streaming_ann() -> None:
         """
         import os
 
-        from hailstorm_spark.io import load_table
         from hailstorm_spark.operators.similarity import ivf_topk
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1855,7 +1850,6 @@ def _register_streaming_upsert() -> None:
         standing∪batch input. In production the directory becomes a
         MERGE INTO on a bucketed keyed table; the shape is identical.
         """
-        from hailstorm_spark.io import load_table
         from hailstorm_spark.streaming.statefold import (
             bucketed_latest_fold,
             read_state,
@@ -1979,10 +1973,8 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch-side sentinel removal: the sentinel pair's window starts
     # past every real event's hour (flush horizon > window size), so
     # cutting at the real max hour removes exactly that row
-    ensure_nanos_conf(spark)
     real_max = (
-        spark.read.parquet(table_path(sf_dir, "events"))
-        .transform(normalize_events_ts)
+        load_table(spark, sf_dir, "events")
         .agg(F.expr("max(unix_micros(ts) div 3600000000) * 3600").alias("h"))
         .collect()[0]["h"]
     )
@@ -2021,8 +2013,6 @@ def streaming_bitmap_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFra
     import os
     import shutil
     import time
-
-    from hailstorm_spark.io import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     stage = tempfile.mkdtemp(prefix="hs_bmstream_days_")
@@ -2110,11 +2100,7 @@ def streaming_static_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch; slowly-changing dims graduate to the SCD2 historization
     query's interval join.
     """
-    ensure_nanos_conf(spark)
-    cust = (
-        spark.read.parquet(table_path(sf_dir, "customer"))
-        .select("c_custkey", "c_mktsegment")
-    )
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     stream = events_stream(spark, sf_dir)
     joined = stream.join(
         F.broadcast(cust),
@@ -2230,7 +2216,6 @@ def streaming_markov_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from hailstorm_spark.io import load_table
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2368,8 +2353,6 @@ def streaming_pchart_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor actually runs in production.
     """
     import os
-
-    from hailstorm_spark.io import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     stage = tempfile.mkdtemp(prefix="hs_pchart_days_")
@@ -2524,7 +2507,6 @@ def streaming_watermark_late_accounting(spark: SparkSession, sf_dir: str) -> Dat
     import shutil
     import time
 
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.operators.ranking import global_row_number
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2664,7 +2646,6 @@ def streaming_cdc_apply_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the real-world CDC condition (a log offset order respects
     commit order per key).
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import bucketed_latest_fold, read_state
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2785,7 +2766,6 @@ def cdc_tombstone_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     expired tombstones dropped) checks the post-compaction bytes, not
     an in-memory intermediate.
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import bucketed_latest_fold, read_state
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2850,7 +2830,6 @@ def streaming_running_spend_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     values (see the retraction test); this query folds the raw event
     feed, so the oracle is the one-shot batch GROUP BY.
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import (
         bucketed_additive_fold,
         read_state,
@@ -2946,7 +2925,6 @@ def statefold_rebucket_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — per-bucket fences from different batch frontiers must not
     mix (rebucket_state docstring).
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import (
         bucketed_latest_fold,
         read_state,
@@ -3035,7 +3013,6 @@ def statefold_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit-schema standing read also skips footer-based inference
     (one fewer listing pass per batch than mergeSchema would pay).
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import bucketed_latest_fold, read_state
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -3096,7 +3073,6 @@ def streaming_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFram
     dispersion must equal the one-shot batch oracle exactly (integer
     sufficient statistics — no drift, no float accumulation order).
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.operators.similarity import (
         int_dot,
         quantize,
@@ -3248,7 +3224,6 @@ def streaming_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     delimiter-contract guard (ADVICE r11).
     """
     from hailstorm_spark.functions.hashing import md5_hash60
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import (
         bucketed_additive_fold,
         read_state,
@@ -3298,7 +3273,6 @@ def _dsheet_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     source or shift the key fields), plus derived token/char/digest
     columns."""
     from hailstorm_spark.functions.hashing import md5_hash60
-    from hailstorm_spark.io import load_table
 
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -3604,7 +3578,6 @@ def streaming_k_anonymity_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     triplets) map-side-combined partials. After the availableNow drain
     the reconstruction must equal the batch gate oracle exactly.
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.queries.integrity import _KANON_BAND, _KANON_K
     from hailstorm_spark.streaming.statefold import (
         bucketed_additive_fold,
@@ -3735,7 +3708,6 @@ def streaming_zonemap_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     stream length. A real table would key on (table, partition) or
     file id — same shape, same fold.
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.streaming.statefold import (
         bucketed_monoid_fold,
         read_state,
@@ -4137,7 +4109,6 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (integer sufficient statistics, no drift in the drift
     monitor).
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.operators.similarity import quantize, valid_embedding
     from hailstorm_spark.queries.similarity import _DISP_MAX_ABS
     from hailstorm_spark.streaming.statefold import (
@@ -4272,7 +4243,6 @@ def streaming_generalization_lattice(spark: SparkSession, sf_dir: str) -> DataFr
     map-side-combined partials; the read-time Expand is over CELLS,
     exactly the batch trade.
     """
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.queries.integrity import _lattice_from_cells
     from hailstorm_spark.streaming.statefold import (
         bucketed_additive_fold,
@@ -4368,7 +4338,6 @@ def streaming_dp_noised_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials; the noise CASE ladder is row-local over |cells| rows.
     """
     from hailstorm_spark.functions.hashing import md5_hash60
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.queries.integrity import (
         _DP_EPS_DEN,
         _DP_EPS_NUM,
@@ -4456,7 +4425,6 @@ def _drain_sensitive_cells(spark: SparkSession, sf_dir: str, prefix: str) -> Dat
     group, categorical t-closeness rolls the cells into group and
     global distributions. Returns the parsed standing cells after an
     availableNow drain. NULL band rides a sentinel."""
-    from hailstorm_spark.io import load_table
     from hailstorm_spark.queries.integrity import _QI_BAND_SQL
     from hailstorm_spark.streaming.statefold import (
         bucketed_additive_fold,

@@ -12,6 +12,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+from hailstorm_spark.io import TABLES, table_schema
 from hailstorm_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
@@ -22,11 +23,34 @@ from tests.conftest import SF_DIR
 #: so one plan per (name, mode) per session is plenty.
 _PLAN_CACHE: dict[tuple[str, str], str] = {}
 
+#: Spark jobs launched while building each query's DataFrame (its first
+#: build in this session), read by the registry-wide build-jobs audit.
+_BUILD_JOBS: dict[str, int] = {}
+
+
+def build_query(spark, name: str):
+    """Build query ``name`` and record the Spark jobs its construction
+    launched. Every table's schema is read through ``io`` first, so a
+    table's first read in the session is not charged to whichever
+    query happens to touch it first."""
+    if not _BUILD_JOBS:
+        for t in TABLES:
+            table_schema(spark, SF_DIR, t)
+    sc = spark.sparkContext
+    group = f"build-{name}-{len(_BUILD_JOBS)}"
+    sc.setJobGroup(group, name)
+    try:
+        df = all_queries()[name].fn(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _BUILD_JOBS.setdefault(name, len(sc.statusTracker().getJobIdsForGroup(group)))
+    return df
+
 
 def plan_of(spark, name: str, mode: str = "formatted") -> str:
     key = (name, mode)
     if key not in _PLAN_CACHE:
-        df = all_queries()[name].fn(spark, SF_DIR)
+        df = build_query(spark, name)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain(mode)
@@ -134,6 +158,12 @@ def test_registry_wide_no_unjustified_nested_loops(spark):
     queries where that shape is the DESIGN, each with its justification
     — a new query (or a refactor of an old one) that plans a nested
     loop outside this list fails here before it ever ships.
+
+    The same sweep audits construction: building a query should only
+    plan it, so a query whose fn launches Spark jobs before the caller
+    asks for a result must be in ``BUILD_JOBS_ALLOWED`` with the reason
+    (an iterative round, a compute-once materialisation, a bounded
+    driver collect, a file round trip).
     """
     import re
 
@@ -231,17 +261,116 @@ def test_registry_wide_no_unjustified_nested_loops(spark):
         # the deliberate CROSS JOIN semantics demo:
         "join_cross_region_pairs": "cross join is the query's semantics",
     }
+    _CKPT_ITER = "per-round eager checkpoint of an iterative graph loop"
+    _CC = (
+        "connected components: candidate edges localCheckpointed, then "
+        "a bounded driver collect picks the local union-find path"
+    )
+    _KMEANS = "driver-side k-means rounds (seed collect + one collect per round)"
+    _QUANT = "with_quantized materialises the quantized vectors once"
+    _RANK = "global_row_number: bucket bounds and per-bucket count collects"
+    BUILD_JOBS_ALLOWED = {
+        # compute-once materialisations (consumed twice or more downstream):
+        "er_multikey_blocked_match": "blocking keys localCheckpointed once",
+        "er_qgram_blocked_match": "q-gram elements localCheckpointed once",
+        "dedup_ngram_jaccard_top_pairs": "jaccard_pairs: shingle postings localCheckpointed",
+        "dedup_minhash_lsh_pairs": "minhash_lsh_candidates: band list localCheckpointed",
+        "dedup_edit_distance_verify": "minhash_lsh_candidates: band list localCheckpointed",
+        "dedup_minhash_estimate_calibration": "signatures localCheckpointed once",
+        "dedup_incremental_new_docs": "band_keys_of: band keys localCheckpointed",
+        "dedup_incremental_bucketed_index": (
+            "band_keys_of localCheckpoint, then the bucketed index is written"
+        ),
+        "dedup_simhash_pairs": "simhash_candidates: signatures localCheckpointed",
+        "dedup_hashed_shingle_spans": (
+            "hashed_shingle_spans: keeper table localCheckpointed, Bloom bits collected"
+        ),
+        "dedup_hashed_maximal_spans": (
+            "hashed_shingle_spans: keeper table localCheckpointed, Bloom bits collected"
+        ),
+        "embedding_near_dup_pairs": _QUANT,
+        "embedding_label_centroid_eval": _QUANT,
+        "ann_cosine_topk": _QUANT + " (brute_force_topk)",
+        "multimodal_embed_topk": _QUANT + " (brute_force_topk)",
+        "ann_cosine_topk_lsh": _QUANT + " (lsh_topk)",
+        "ann_filtered_topk_lsh": _QUANT + " (lsh_topk)",
+        "embedding_lsh_near_dup_pairs": _QUANT + ", then the band list",
+        "ann_cosine_topk_ivf": _QUANT + "; bounded centroid collect",
+        "ann_ivf_kmeans_recall": (
+            _KMEANS + "; the brute-force recall denominator is localCheckpointed"
+        ),
+        "ann_pq_adc_topk": _KMEANS + " per subspace; N_Q query-row collect",
+        "embedding_pq_codebook": _KMEANS + " per subspace",
+        "embedding_kmeans_integer": _KMEANS,
+        "ann_ivf_index_persist_roundtrip": (
+            "writes the IVF index and reads it back (the query is the round "
+            "trip); bounded centroid collects"
+        ),
+        # connected components (iterative, with a local fast path):
+        "corpus_prep_clean": _CC,
+        "dedup_clusters_keep_one": _CC,
+        "dedup_clusters_star": _CC,
+        "dedup_clusters_keep_best": _CC,
+        "corpus_split_leakage_free": _CC,
+        "semantic_dedup_keep_one": _CC,
+        "er_entity_clusters": _CC,
+        "er_survivorship_golden_record": _CC,
+        "er_incremental_cluster_update": _CC + "; delta-closure collect",
+        # iterative graph rounds:
+        "text_pagerank_keywords": _CKPT_ITER,
+        "graph_bfs_khop_reach": _CKPT_ITER,
+        "graph_lpa_word_communities": _CKPT_ITER,
+        "graph_kcore_dense_subgraph": _CKPT_ITER,
+        "text_bpe_merge_rounds": "one driver collect per BPE merge round",
+        # exact global ranking and selection:
+        "events_rfm_segments": _RANK + " for three metrics; input localCheckpointed",
+        "events_lorenz_activity_deciles": _RANK,
+        "corpus_shard_assignment": _RANK,
+        "corpus_negative_sampling_pairs": _RANK,
+        "corpus_prep_v2_end_to_end": _RANK + "; Bloom bits collected",
+        "events_exact_median_selection": "exact k-th selection: bounded radix-round collects",
+        "window_ntile_quartiles_distributed": (
+            "range-partition splits (percentile_approx collect) and a size probe"
+        ),
+        "stats_equidepth_price_histogram": "row count sizes the equi-depth buckets",
+        # bounded driver collects that parameterise the plan:
+        "sketch_bloom_blocklist_prune": "Bloom filter bits collected to a literal",
+        "text_inverted_index_conjunctive": "top-10 terms collected as the probe set",
+        "cogroup_clicks_before_purchase": "bounded heavy-key collect (skew split)",
+        "events_matview_incremental_daily": (
+            "the view's refresh boundary (max day) collected, then the view is "
+            "written and read back"
+        ),
+        "events_matview_incremental_deletes": (
+            "refresh boundaries collected; the view is written and read back"
+        ),
+        "cdc_tombstone_compaction": "the state folds run while building (keyed-state writes)",
+        # the query IS a write-then-read round trip:
+        "join_bucketed_colocated_revenue": "saveAsTable of the two bucketed sides",
+        "scan_dynamic_partition_pruning": "writes the partitioned fact table, reads it back",
+        "io_csv_roundtrip_orders": "writes CSV, reads it back",
+        "io_json_roundtrip_documents": "writes JSON lines, reads them back",
+        "io_orc_roundtrip_lineitem": "writes ORC, reads it back",
+        "io_parquet_schema_evolution": "writes two schema versions, merges them on read",
+        "io_compaction_small_files": "writes small files, compacts, reads back",
+    }
     offenders = {}
+    eager = {}
     for name, spec in all_queries().items():
-        if "streaming" in spec.tags or name in ALLOWED:
+        if "streaming" in spec.tags:
             continue
         plan = plan_of(spark, name, mode="simple")
+        if _BUILD_JOBS[name] and name not in BUILD_JOBS_ALLOWED:
+            eager[name] = _BUILD_JOBS[name]
+        if name in ALLOWED:
+            continue
         ops = set(
             re.findall(r"\b(BroadcastNestedLoopJoin|CartesianProduct)\b", plan)
         )
         if ops:
             offenders[name] = sorted(ops)
     assert not offenders, f"unjustified nested-loop plans: {offenders}"
+    assert not eager, f"Spark jobs launched while building (name: jobs): {eager}"
 
 
 def test_registry_wide_no_row_at_a_time_python_udfs(spark):
