@@ -1603,47 +1603,37 @@ def _run_folds(spark, tasks, n_buckets: int, overlap: bool) -> None:
     branch's tail instead of waiting for its last straggler.
 
     Conf safety (the reason fold confs could not previously overlap):
-    every fold toggles session-global confs (AQE off, shuffle width =
-    bucket count, dynamic partition overwrite). This helper pins all
-    three to exactly the values every branch's toggles would set —
-    the drains' stores share one bucket count — BEFORE the threads
-    start and restores the originals after they join; the inner
-    save/sets then write only those identical pinned values in any
-    interleaving, so no race can corrupt or leak a conf. (The rare
-    above-cap closure path inside the label step briefly pins the loop
-    width to the core count; a concurrently-planned fold write would
-    get that width for one plan — results unaffected, the restore
-    writes back the pinned value.) ``overlap=False`` (the replay
-    storm's chaos hooks need deterministic stage boundaries) runs the
-    branches serially, exactly the pre-r15 shape."""
+    every fold toggles two session-global confs (AQE off, shuffle
+    width) through ``statefold._fold_confs``. This helper enters the
+    same context manager with the same width — the drains' stores share
+    one bucket count, and the width is ``statefold._fold_width``:
+    min(buckets, cores), still one file per touched bucket per batch —
+    BEFORE the threads start and restores the originals after they
+    join; the inner save/sets then write only those identical pinned
+    values in any interleaving, so no race can corrupt or leak a conf
+    (given a core count that holds still for the overlap, see
+    ``_fold_confs``). Dynamic partition overwrite is a per-write
+    option, not a conf. (The rare above-cap closure path inside the
+    label step briefly pins the loop width to the core count; a
+    concurrently-planned fold write would get that width for one plan
+    — results unaffected, the restore writes back the pinned value.)
+    ``overlap=False`` (the replay storm's chaos hooks need
+    deterministic stage boundaries) runs the branches serially,
+    exactly the pre-r15 shape."""
     if not overlap or len(tasks) == 1:
         for t in tasks:
             t()
         return
     from concurrent.futures import ThreadPoolExecutor
 
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled", "true"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.sources.partitionOverwriteMode": spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
-            futures = [ex.submit(t) for t in tasks]
-            for f in futures:
-                f.result()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    from hailstorm_spark.streaming.statefold import _fold_confs, _fold_width
+
+    with _fold_confs(spark, _fold_width(spark, n_buckets)), ThreadPoolExecutor(
+        max_workers=len(tasks)
+    ) as ex:
+        futures = [ex.submit(t) for t in tasks]
+        for f in futures:
+            f.result()
 
 
 def _stage_parity_waves(

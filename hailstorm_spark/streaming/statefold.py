@@ -97,16 +97,15 @@ __all__ = [
 _EPOCH_FILE = "_epoch"
 _LAYOUT_FILE = "_n_buckets"
 _MONOID_FILE = "_monoid.json"
-
 #: log-structured segment threshold (r15): an append-mode bucket whose
 #: file count reaches this is folded down to ONE segment by the same
 #: batch that touches it next. Bounds both the read fan-in (read_state
 #: merges at most this many segments per bucket) and the replay fence
 #: scan (per-bucket max(_b) reads this many footers), at the cost of
-#: one bucket-local rewrite every K touches — the LSM trade. A dial,
-#: not a core-count tune: the right K is about merge amortization and
-#: is scale-independent.
-_COMPACT_SEGMENTS = int(os.environ.get("SPARK_GRAFT_STATE_COMPACT_SEGMENTS", "8"))
+#: one bucket-local rewrite every K touches — the LSM trade. The right
+#: K is about merge amortization and is scale-independent, so it is a
+#: constant, not a setting.
+_COMPACT_SEGMENTS = 8
 
 
 def _bucket_file_counts(state_dir: str) -> dict[int, int]:
@@ -131,42 +130,61 @@ def _bucket_file_counts(state_dir: str) -> dict[int, int]:
     return out
 
 
+def _fold_width(s, n_buckets: int) -> int:
+    """Exchange and writer width of every fold: min(buckets, cores).
+    Writes route bucket ``b`` to task ``b mod width``
+    (``repartitionById``), so it is still one file per touched bucket
+    per batch, and the tasks are exactly balanced. More tasks than
+    cores only adds scheduling rounds: on four cores, a latest-wins
+    write of a 20k-row batch ran 37 tasks at width 16 and runs 13 at
+    width 4. A fold call reads it once and passes it down."""
+    return min(n_buckets, s.sparkContext.defaultParallelism)
+
+
 @contextmanager
-def _plan_pinned(s, n_buckets: int):
-    """Run a fold's actions with AQE off and the shuffle width derived
-    from the LAYOUT, not the session. The fold plans are FIXED SHAPE —
-    a touched-bucket distinct, a fence read, and a union → aggregate →
-    ``repartition(n_buckets)`` → dynamic-overwrite write whose output
-    partitioning is pinned by the on-disk layout — so adaptive
-    execution has nothing to adapt (no joins, no skew, the final
-    partition count is the bucket count by contract) and only adds one
-    scheduling round per exchange: measured 5 jobs per fold call with
-    AQE vs 2 without, identical results, at EVERY scale — the
-    multi-trigger drains pay that floor dozens of times per run. With
-    AQE off the intermediate exchanges would fall back to the session's
-    ``shuffle.partitions`` (core-count locally), scheduling near-empty
-    tasks per fold; ``n_buckets`` is the principled width at any scale
-    because the bucket count IS the state-layer parallelism dial (the
-    sizing rule in SCALE.md: a bucket ≈ a comfortable task split at
-    the target scale — a keyspace that outgrows it gets re-bucketed,
-    which widens these exchanges in the same move). Session-conf
-    toggle (not thread-local) like the partitionOverwriteMode toggle
-    below. Concurrency contract (r15): folds either run serially
-    inside foreachBatch, or overlap under
+def _fold_confs(s, width: int):
+    """Run a fold's actions with AQE off and the shuffle width set to
+    ``width`` (:func:`_fold_width`), not by the session. The fold plans
+    are FIXED SHAPE — a touched-bucket distinct, a fence read, and a
+    union → aggregate → ``repartitionById`` → write — so adaptive
+    execution has nothing to adapt (no joins, no skew) and only adds
+    one scheduling round per exchange: measured 5 jobs per fold call
+    with AQE vs 2 without, identical results, at EVERY scale — the
+    multi-trigger drains pay that floor dozens of times per run.
+    Width = min(buckets, cores), and it is still one file per touched
+    bucket per batch: the bucket count is the state layer's
+    parallelism dial (SCALE.md), capped by the cores that can run it.
+
+    Session-conf toggle (not thread-local); on exit each key gets back
+    exactly what it had — its old value, or no value if it was unset
+    (setting a default back explicitly would still change what a later
+    ``conf.get`` returns). Concurrency contract (r15): folds either run
+    serially inside foreachBatch, or overlap under
     streaming_queries._run_folds, which pins these exact values for
     the whole overlap region first — every concurrent save/set then
     reads and writes the same pinned values in any interleaving, so
     the toggles stay race-free BY VALUE, and the outer restore is the
-    only one that writes anything else."""
-    saved_aqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    saved_sp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
+    only one that writes anything else. "Same values" assumes the core
+    count (``defaultParallelism``) holds still for the overlap; if
+    executors come or go meanwhile, an overlapped plan may get another
+    fold's width for its intermediate exchanges — still correct, and
+    the writers' ``repartitionById`` width is fixed in each plan, so
+    the file layout is unaffected."""
+    settings = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(width),
+    }
+    saved = {k: s.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        s.conf.set(k, v)
     try:
         yield
     finally:
-        s.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        s.conf.set("spark.sql.shuffle.partitions", saved_sp)
+        for k, v in saved.items():
+            if v is None:
+                s.conf.unset(k)
+            else:
+                s.conf.set(k, v)
 
 
 def _has_state(state_dir: str) -> bool:
@@ -429,7 +447,7 @@ def bucketed_latest_fold(
     bcol = bucket_col or key
     frontier: list[int | None] = [None]  # this closure's committed max id
 
-    def _imm_append(s, rows, batch_id: int, todo) -> None:
+    def _imm_append(s, rows, batch_id: int, todo, width: int) -> None:
         """Append-mode write: batch rows (restricted to ``todo`` when
         given) land as one new segment per bucket; touched buckets at
         the segment threshold are compacted in the same call. The
@@ -456,7 +474,7 @@ def bucketed_latest_fold(
             F.lit(0),
         )
         checked = (
-            out.repartition(n_buckets, F.col("bucket"))
+            out.repartitionById(width, "bucket")
             .groupBy(key, "bucket")
             .agg(*[F.first(c).alias(c) for c in payload], F.count(F.lit(1)).alias("_n"))
             .withColumn("_n", guard)
@@ -466,7 +484,7 @@ def bucketed_latest_fold(
         counts = _bucket_file_counts(state_dir)
         over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
         if over and todo is None:
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 todo = tuple(
                     sorted(
                         r[0]
@@ -481,7 +499,7 @@ def bucketed_latest_fold(
         )
         plain = todo is not None and len(compact) == len(todo)
         if not plain:
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 append_part.write.partitionBy("bucket").mode("append").parquet(
                     state_dir
                 )
@@ -497,22 +515,16 @@ def bucketed_latest_fold(
             merged = standing.unionByName(
                 checked.filter(F.col("bucket").isin(compact))
             ).repartition(len(compact), F.col("bucket"))
-            saved = s.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                with _plan_pinned(s, n_buckets):
-                    merged.write.partitionBy("bucket").mode(
-                        "overwrite"
-                    ).parquet(state_dir)
-            finally:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+            with _fold_confs(s, width):
+                merged.write.partitionBy("bucket").mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).parquet(state_dir)
 
     def fold(
         batch_df: DataFrame, batch_id: int, touched_hint=None
     ) -> None:
         s = batch_df.sparkSession
+        width = _fold_width(s, n_buckets)
         _check_layout(state_dir, n_buckets, s, bcol)
         rows = batch_df.withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bcol)), F.lit(n_buckets)).cast("int")
@@ -526,7 +538,7 @@ def bucketed_latest_fold(
         ):
             # committed-frontier fast path: provably not a replay, so
             # no touched collect and no fence scan — one append job
-            _imm_append(s, rows, batch_id, None)
+            _imm_append(s, rows, batch_id, None, width)
             frontier[0] = batch_id
             return
         if touched_hint is not None:
@@ -537,7 +549,7 @@ def bucketed_latest_fold(
             # pruned read; a SUBSET would silently duplicate keys.
             touched = tuple(sorted(set(touched_hint)))
         else:
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 touched = tuple(
                     sorted(r[0] for r in rows.select("bucket").distinct().collect())
                 )
@@ -552,7 +564,7 @@ def bucketed_latest_fold(
                 # buckets (column-pruned scan — reads two thin columns,
                 # never payloads); buckets already stamped with this or
                 # a later batch were committed by a previous attempt
-                with _plan_pinned(s, n_buckets):
+                with _fold_confs(s, width):
                     applied = {
                         r["bucket"]
                         for r in s.read.parquet(state_dir)
@@ -566,7 +578,7 @@ def bucketed_latest_fold(
                 if not todo:
                     frontier[0] = max(frontier[0] or -1, batch_id)
                     return
-            _imm_append(s, rows, batch_id, todo)
+            _imm_append(s, rows, batch_id, todo, width)
             frontier[0] = max(frontier[0] or -1, batch_id)
             return
         if _has_state(state_dir):
@@ -638,20 +650,15 @@ def bucketed_latest_fold(
             # cluster writers by bucket: ONE file per touched bucket per
             # batch instead of (shuffle tasks × buckets) shards — the
             # small-file guard; the aggregation already shuffled by key,
-            # so this moves only the touched buckets' winners once more
-            # (n_buckets target partitions, not shuffle.partitions —
-            # no point scheduling more writer tasks than buckets)
-            .repartition(n_buckets, F.col("bucket"))
+            # so this moves only the touched buckets' winners once more.
+            # Width = min(buckets, cores), and it is still one file per
+            # touched bucket per batch (see _fold_width)
+            .repartitionById(width, "bucket")
         )
-        saved = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            with _plan_pinned(s, n_buckets):
-                merged.write.partitionBy("bucket").mode("overwrite").parquet(
-                    state_dir
-                )
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+        with _fold_confs(s, width):
+            merged.write.partitionBy("bucket").mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).parquet(state_dir)
 
     # layout facts for callers that compute touched_hint driver-side
     fold.n_buckets = n_buckets
@@ -800,7 +807,7 @@ def bucketed_monoid_fold(
     aggs = [_MONOID_OPS[op](c).cast("long").alias(c) for c, op in cols.items()]
     frontier: list[int | None] = [None]  # this closure's committed max id
 
-    def _append_segments(s, partial, batch_id: int, todo) -> None:
+    def _append_segments(s, partial, batch_id: int, todo, width: int) -> None:
         """Append the batch's partials (restricted to ``todo`` when
         given) as one segment per touched bucket; compact any touched
         bucket at the segment threshold in the same call."""
@@ -810,7 +817,7 @@ def bucketed_monoid_fold(
         counts = _bucket_file_counts(state_dir)
         over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
         if over and todo is None:
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 todo = tuple(
                     sorted(
                         r[0]
@@ -820,12 +827,12 @@ def bucketed_monoid_fold(
                 part = part.localCheckpoint(eager=True)
         compact = sorted(over & set(todo)) if todo is not None else []
         if not (todo is not None and len(compact) == len(todo)):
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 (
                     part.filter(~F.col("bucket").isin(compact))
                     if compact
                     else part
-                ).repartition(n_buckets, F.col("bucket")).write.partitionBy(
+                ).repartitionById(width, "bucket").write.partitionBy(
                     "bucket"
                 ).mode("append").parquet(state_dir)
         if compact:
@@ -843,22 +850,16 @@ def bucketed_monoid_fold(
                 .agg(*aggs, F.max("_b").alias("_b"))
                 .repartition(len(compact), F.col("bucket"))
             )
-            saved = s.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                with _plan_pinned(s, n_buckets):
-                    merged.write.partitionBy("bucket").mode(
-                        "overwrite"
-                    ).parquet(state_dir)
-            finally:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+            with _fold_confs(s, width):
+                merged.write.partitionBy("bucket").mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).parquet(state_dir)
 
     def fold(
         batch_df: DataFrame, batch_id: int, touched_hint=None
     ) -> None:
         s = batch_df.sparkSession
+        width = _fold_width(s, n_buckets)
         _check_layout(state_dir, n_buckets, s, key)
         _stamp_monoid(state_dir, key, cols)
         adopted = False
@@ -881,13 +882,13 @@ def bucketed_monoid_fold(
         ):
             # committed-frontier fast path: provably not a replay (see
             # bucketed_latest_fold) — one append job, no collects
-            _append_segments(s, partial, batch_id, None)
+            _append_segments(s, partial, batch_id, None, width)
             frontier[0] = batch_id
             return
         if touched_hint is not None:
             touched = tuple(sorted(set(touched_hint)))
         else:
-            with _plan_pinned(s, n_buckets):
+            with _fold_confs(s, width):
                 touched = tuple(
                     sorted(
                         r[0]
@@ -936,7 +937,7 @@ def bucketed_monoid_fold(
                     .parquet(state_dir)
                     .filter(F.col("bucket").isin(list(touched)))
                 )
-                with _plan_pinned(s, n_buckets):
+                with _fold_confs(s, width):
                     applied = {
                         r["bucket"]
                         for r in standing.groupBy("bucket")
@@ -954,7 +955,7 @@ def bucketed_monoid_fold(
             touched_log.append((batch_id, todo))
         if not todo:
             return
-        _append_segments(s, partial, batch_id, todo)
+        _append_segments(s, partial, batch_id, todo, width)
         frontier[0] = max(frontier[0] or -1, batch_id)
 
     # layout facts for callers that compute touched_hint driver-side
@@ -1032,16 +1033,11 @@ def compact_expired_tombstones(
         r[0] for r in survivors.select("bucket").distinct().collect()
     }
     if surviving:
-        saved = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        survivors.repartition(len(surviving), F.col("bucket")).write.partitionBy(
+            "bucket"
+        ).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(
+            state_dir
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            survivors.repartition(len(surviving), F.col("bucket")).write.partitionBy(
-                "bucket"
-            ).mode("overwrite").parquet(state_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     empty = spark.createDataFrame([], survivors.drop("bucket").schema)
     for b in dirty:
         if b not in surviving:

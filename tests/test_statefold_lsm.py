@@ -11,7 +11,10 @@ The structural claims these pin:
 - the frontier fast path changes no answers, and a fresh closure (a
   restarted process — where replays actually arrive) is still fenced;
 - a batch violating the immutable stores' key-uniqueness contract
-  dies loudly instead of appending silent duplicate state.
+  dies loudly instead of appending silent duplicate state;
+- every fold writes with min(n_buckets, cores) tasks and exactly one
+  new file per touched bucket, and fold calls leave the session's
+  confs as they found them.
 """
 
 from __future__ import annotations
@@ -239,3 +242,156 @@ def test_latest_fold_touched_hint_is_equivalent(spark, tmp_path):
     assert set(map(tuple, read_state(spark, hint_d).collect())) == set(
         map(tuple, read_state(spark, ref_d).collect())
     )
+
+
+def _new_files_per_bucket(before: dict, after: dict) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for p in after.keys() - before.keys():
+        b = os.path.dirname(p)
+        out[b] = out.get(b, 0) + 1
+    return out
+
+
+def _last_job_tasks(spark, group: str) -> int:
+    """Tasks of the result stage of the group's last job: a fold's
+    write is the last job it runs, and its result stage is the write."""
+    st = spark.sparkContext.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return st.getStageInfo(max(job.stageIds)).numTasks
+
+
+@pytest.mark.parametrize("n_buckets", [16, 2])
+def test_fold_writers_are_min_buckets_cores_one_file_per_bucket(
+    spark, tmp_path, monkeypatch, n_buckets
+):
+    """Every fold writes with min(n_buckets, cores) tasks, one new file
+    per touched bucket; the immutable append's uniqueness guard rides
+    the write's own exchange."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hailstorm_spark.functions.hashing import spark_bucket
+
+    sc = spark.sparkContext
+    width = min(n_buckets, sc.defaultParallelism)
+    lschema = "user_id long, ts long, uid long, payload string"
+    folds = {
+        "monoid": (
+            bucketed_monoid_fold(
+                str(tmp_path / "monoid"), key="user_id",
+                cols={"one": "sum", "cents": "max"}, n_buckets=n_buckets,
+            ),
+            lambda keys, i: spark.createDataFrame(
+                [(u, 1, u * i) for u in keys] + [(u, 1, 0) for u in keys[::3]],
+                MSCHEMA,
+            ),
+        ),
+        "latest": (
+            bucketed_latest_fold(
+                str(tmp_path / "latest"), key="user_id",
+                order_cols=("ts", "uid"), n_buckets=n_buckets,
+            ),
+            lambda keys, i: spark.createDataFrame(
+                [(u, i, u, f"p{i}") for u in keys], lschema
+            ),
+        ),
+        "immutable": (
+            bucketed_latest_fold(
+                str(tmp_path / "immutable"), key="user_id",
+                order_cols=("user_id",), n_buckets=n_buckets, immutable=True,
+            ),
+            lambda keys, i: spark.createDataFrame(
+                [(u, 0, u, f"r{u}") for u in keys], lschema
+            ),
+        ),
+    }
+    plans: list[str] = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    for name, (fold, make) in folds.items():
+        d = str(tmp_path / name)
+        fold(make(list(range(200)), 0), 0)
+        # batch 1: overlapping keys for the mutable folds, fresh keys
+        # for the immutable store (its rows never change)
+        keys = list(range(200, 400) if name == "immutable" else range(100, 300))
+        before = _files(d)
+        group = f"fold-width-{name}-{n_buckets}"
+        plans.clear()
+        sc.setJobGroup(group, name)
+        try:
+            fold(make(keys, 1), 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        touched = {f"bucket={spark_bucket(u, n_buckets)}" for u in keys}
+        assert _new_files_per_bucket(before, _files(d)) == dict.fromkeys(
+            touched, 1
+        ), name
+        assert _last_job_tasks(spark, group) == width, name
+        if name == "immutable":
+            assert len(plans) == 1
+            assert sum(
+                line.lstrip(" +-:").startswith("Exchange ")
+                for line in plans[0].splitlines()
+            ) == 1, plans[0]
+
+
+def test_folds_leave_session_confs_as_found(spark, tmp_path):
+    """A fold call, and two folds overlapped by ``_run_folds``, restore
+    the three session settings the folds pin — including a key that
+    was unset, which must stay unset."""
+    from hailstorm_spark.queries.streaming_queries import _run_folds
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.sources.partitionOverwriteMode",
+    )
+    def snapshot():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    original = snapshot()
+    found = {keys[0]: "7", keys[1]: "true", keys[2]: None}
+
+    lschema = "user_id long, ts long, uid long, payload string"
+    batch = spark.createDataFrame(
+        [(u, 1, u, "x") for u in range(50)], lschema
+    )
+    mbatch = spark.createDataFrame([(u, 1, u) for u in range(50)], MSCHEMA)
+    latest = bucketed_latest_fold(
+        str(tmp_path / "a"), key="user_id", order_cols=("ts", "uid"),
+        n_buckets=B,
+    )
+    latest2 = bucketed_latest_fold(
+        str(tmp_path / "b"), key="user_id", order_cols=("ts", "uid"),
+        n_buckets=B,
+    )
+    monoid = bucketed_monoid_fold(
+        str(tmp_path / "c"), key="user_id", cols={"one": "sum", "cents": "sum"},
+        n_buckets=B,
+    )
+    try:
+        for k, v in found.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        assert snapshot() == found
+        latest(batch, 0)
+        assert snapshot() == found
+        _run_folds(
+            spark,
+            [lambda: latest2(batch, 0), lambda: monoid(mbatch, 0)],
+            B,
+            overlap=True,
+        )
+        assert snapshot() == found
+    finally:
+        for k, v in original.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
