@@ -127,15 +127,10 @@ def upsert_partitioned(
     This is the 100 TB daily-rebuild pattern: recompute one day/source
     slice and slot it in atomically per partition, instead of rewriting
     (or worse, read-modify-writing) the full table. Idempotent: re-
-    running the same slice overwrites itself. The conf is set on the
-    writer's session only for this call and restored after.
+    running the same slice overwrites itself. The overwrite mode is a
+    per-write option, so the session's conf is never touched.
     """
     by = [by] if isinstance(by, str) else list(by)
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    try:
-        spark.conf.set(key, "dynamic")
-        df.write.mode("overwrite").partitionBy(*by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *by
+    ).parquet(path)

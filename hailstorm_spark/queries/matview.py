@@ -81,14 +81,9 @@ def events_matview_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFr
     ).mode("overwrite").parquet(mv_dir)
     # the delta: newest day only, appended as its own partition
     # (dynamic partition overwrite = replay-safe)
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial(e.filter(F.col("day") == F.lit(last_day))).write.partitionBy(
-            "day"
-        ).mode("overwrite").parquet(mv_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    partial(e.filter(F.col("day") == F.lit(last_day))).write.partitionBy(
+        "day"
+    ).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(mv_dir)
 
     partials = spark.read.parquet(mv_dir)
     return partials.groupBy("event_type").agg(
@@ -239,12 +234,9 @@ def events_matview_incremental_deletes(spark: SparkSession, sf_dir: str) -> Data
         F.lit(0).cast("long").alias("sum_micros"),
     )
     out = merged.unionByName(tombstones)
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.partitionBy("day").mode("overwrite").parquet(mv_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    out.write.partitionBy("day").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(mv_dir)
 
     # n > 0 excludes tombstoned days from every aggregate, including
     # the n_days count_distinct

@@ -2821,7 +2821,7 @@ def streaming_running_spend_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed, so the oracle is the one-shot batch GROUP BY.
     """
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -2841,8 +2841,8 @@ def streaming_running_spend_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch-id sequence: stamping the state with the checkpoint identity
     # makes a fresh-checkpoint restart fail loudly instead of silently
     # swallowing restarted ids as replays (tests/test_statefold.py)
-    base = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -3070,7 +3070,7 @@ def streaming_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFram
     )
     from hailstorm_spark.queries.similarity import _DISP_MAX_ABS
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -3091,8 +3091,8 @@ def streaming_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFram
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -3215,7 +3215,7 @@ def streaming_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hailstorm_spark.functions.hashing import md5_hash60
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -3226,8 +3226,8 @@ def streaming_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -3410,7 +3410,6 @@ def _bounded_datasheet_drain(
     max; idempotent, so replays are doubly safe). Returns
     (exact datasheet DF, per-source distinct-docs estimate DF)."""
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
         bucketed_monoid_fold,
         read_state,
     )
@@ -3423,8 +3422,8 @@ def _bounded_datasheet_drain(
     cnt_dir = os.path.join(work, "counts")
     reg_dir = os.path.join(work, "registers")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    cnt_fold = bucketed_additive_fold(
-        cnt_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    cnt_fold = bucketed_monoid_fold(
+        cnt_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
     reg_fold = bucketed_monoid_fold(
         reg_dir, key="skey", cols={"x": "max"}, epoch=ckpt
@@ -3570,7 +3569,7 @@ def streaming_k_anonymity_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from hailstorm_spark.queries.integrity import _KANON_BAND, _KANON_K
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -3589,8 +3588,8 @@ def streaming_k_anonymity_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -4102,7 +4101,7 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hailstorm_spark.operators.similarity import quantize, valid_embedding
     from hailstorm_spark.queries.similarity import _DISP_MAX_ABS
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -4131,8 +4130,8 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -4235,7 +4234,7 @@ def streaming_generalization_lattice(spark: SparkSession, sf_dir: str) -> DataFr
     """
     from hailstorm_spark.queries.integrity import _lattice_from_cells
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -4254,8 +4253,8 @@ def streaming_generalization_lattice(spark: SparkSession, sf_dir: str) -> DataFr
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -4334,7 +4333,7 @@ def streaming_dp_noised_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dp_noise_case,
     )
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -4349,8 +4348,8 @@ def streaming_dp_noised_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -4417,7 +4416,7 @@ def _drain_sensitive_cells(spark: SparkSession, sf_dir: str, prefix: str) -> Dat
     availableNow drain. NULL band rides a sentinel."""
     from hailstorm_spark.queries.integrity import _QI_BAND_SQL
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -4433,8 +4432,8 @@ def _drain_sensitive_cells(spark: SparkSession, sf_dir: str, prefix: str) -> Dat
 
     state_dir = os.path.join(work, "state")
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    base = bucketed_additive_fold(
-        state_dir, key="skey", sum_cols=("x",), epoch=ckpt
+    base = bucketed_monoid_fold(
+        state_dir, key="skey", cols={"x": "sum"}, epoch=ckpt
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -4705,7 +4704,10 @@ def _er_pruned_endpoint_labels(
     rows. Exposed separately so the plan pin can assert the partition
     filter and the broadcast join on THIS frame (the production caller
     checkpoints it immediately, which hides its plan). The pruning
-    modulus comes from the layout's ``_n_buckets`` stamp (ADVICE r13)."""
+    modulus comes from the layout's ``_n_buckets`` stamp (ADVICE r13).
+    The label layout is an append-only log of versions, so an endpoint
+    may come back several times; the rows carry ``v`` and the caller
+    keeps each doc's newest."""
     from hailstorm_spark.streaming.statefold import state_bucket_count
 
     endpoints = (
@@ -4728,7 +4730,7 @@ def _er_pruned_endpoint_labels(
         s.read.parquet(labels_dir)
         .filter(F.col("bucket").isin(touched))
         .join(F.broadcast(endpoints), "doc_id")
-        .select("doc_id", "cluster_id")
+        .select("doc_id", "cluster_id", "v")
     )
 
 
@@ -5057,13 +5059,17 @@ def _er_indexed_changes_local(
         n_b = state_bucket_count(labels_dir, _ER_STATE_BUCKETS)
         touched = sorted({spark_bucket(e, n_b) for e in endpoints})
         ep_df = local_df(s, [(e,) for e in endpoints], "doc_id long")
-        labels = {
-            r["doc_id"]: r["cluster_id"]
-            for r in s.read.parquet(labels_dir)
+        rows = (
+            s.read.parquet(labels_dir)
             .filter(F.col("bucket").isin(touched))
             .join(F.broadcast(ep_df), "doc_id")
-            .select("doc_id", "cluster_id")
+            .select("doc_id", "cluster_id", "v")
             .collect()
+        )
+        # the label log holds a doc's versions side by side: the newest
+        # (highest v) wins, as read_state merges
+        labels = {
+            r["doc_id"]: r["cluster_id"] for r in sorted(rows, key=lambda r: r["v"])
         }
     parent: dict = {}
 
@@ -5182,8 +5188,14 @@ def _er_indexed_changes(
             )
 
     if _has_state(labels_dir):
-        pruned = _er_pruned_endpoint_labels(s, labels_dir, pairs).localCheckpoint(
-            eager=True
+        # the label log holds a doc's versions side by side: keep each
+        # endpoint's newest (latest-wins by v, as read_state merges), on
+        # rows already bounded by the delta
+        pruned = (
+            _er_pruned_endpoint_labels(s, labels_dir, pairs)
+            .groupBy("doc_id")
+            .agg(F.max_by("cluster_id", "v").alias("cluster_id"))
+            .localCheckpoint(eager=True)
         )
     else:
         pruned = local_df(s, [], "doc_id long, cluster_id long")

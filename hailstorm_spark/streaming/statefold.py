@@ -2,75 +2,84 @@
 
 The naive versioned fold (state_v{N} = merge(state_v{N-1}, batch))
 rewrites the ENTIRE state table every micro-batch: correct, but at
-100 TB the per-batch write cost is O(|state|), not O(|batch|) — a
-billion-key latest-value table would be rewritten end-to-end to apply
-a thousand-row change batch. This module applies the same discipline
-``events_matview_incremental_deletes`` uses per day, per HASH BUCKET:
+100 TB the per-batch write cost is O(|state|), not O(|batch|). The
+folds here keep state in ONE directory, hash-partitioned on
+``bucket = pmod(xxhash64(key), n_buckets)``, as a LOG of per-key
+partials merged on read:
 
-1. the state table lives in ONE directory, hash-partitioned on
-   ``bucket = pmod(xxhash64(key), n_buckets)``;
-2. each batch computes its TOUCHED buckets (a bounded collect of at
-   most ``n_buckets`` ints — the distinct-bucket aggregation is one
-   tiny shuffle of the batch only);
-3. only those buckets' standing rows are read back (``isin`` on the
-   partition column — a static partition filter, so the scan prunes
-   to the touched directories and the cold buckets are never opened);
-4. one per-key window resolves latest-wins over (standing ∪ batch);
-5. the result is written with DYNAMIC partition overwrite, which
-   replaces exactly the partitions present in the output — the
-   touched buckets — and leaves every other bucket's files byte-for-
-   byte untouched (pinned by tests/test_statefold.py, which snapshots
-   file (path, mtime, size) across batches).
+1. each batch is reduced to one row per (key, bucket) with the
+   store's merge — per-column monoid ops (``bucketed_monoid_fold``)
+   or latest-wins, ``max_by(struct(payload), struct(order_cols))``
+   (``bucketed_latest_fold``) — with a map-side combine, so the
+   exchange carries O(distinct batch keys) rows;
+2. those rows are APPENDED as one new segment (file) per touched
+   bucket: standing files are neither read nor rewritten, and every
+   other bucket's files stay byte-for-byte untouched (pinned by
+   tests/test_statefold.py, which snapshots file (path, mtime, size)
+   across batches);
+3. ``read_state`` merges each key's segments with the same op, driven
+   by the ``_monoid.json`` sidecar the folds stamp (key, merge, union
+   schema);
+4. a touched bucket whose segment count reaches ``_COMPACT_SEGMENTS``
+   is merged down to one row per key by the batch that touches it, so
+   read fan-in stays bounded.
 
-Per-batch cost is therefore O(|batch| + |state restricted to touched
-buckets|). ``n_buckets`` is the granularity dial: more buckets →
-smaller rewrite amplification per batch but more files; size it so a
-bucket ≈ a comfortable parquet task split at the target scale.
+A fold step is one Spark job and costs O(|batch|). ``n_buckets`` is
+the granularity dial (SCALE.md, "State bucket sizing").
 
-Exactly-once: foreachBatch is at-least-once, and this fold is applied
-IN PLACE (no version fencing), so idempotence must come from the merge
-itself — latest-wins by a total (order_cols, key) ranking is idempotent
-under replays (re-merging rows already in the state re-selects the
-same winners) and commutative for rows of DIFFERENT keys. What it is
-NOT is order-insensitive for the SAME key when the order columns tie
-across distinct payloads — callers must make the ranking total
-(ts + a unique id tiebreaker), which every caller here does.
+Exactly-once: foreachBatch is at-least-once. Both merges are
+commutative monoids (the paper's requirement on bolt state), and
+latest-wins under a total (order_cols, key) ranking is also
+IDEMPOTENT: re-merging a row already in the state re-selects the same
+winner. So a replayed batch — or a fresh checkpoint whose batch ids
+restart at 0 — just appends a duplicate segment that the merge
+absorbs, and the latest-wins log needs no fence. Callers must make
+the ranking total (ts + a unique id tiebreaker), which every caller
+here does. Sum, min and friends are not idempotent: monoid segments
+carry a ``_b`` batch-id fence and the directory an ``_epoch`` stamp
+(see ``bucketed_monoid_fold``).
 
-In production the directory becomes a MERGE INTO on a bucketed table
-(Delta/Iceberg); the shape — shuffle the batch, prune to touched
-buckets, rewrite only those — is identical.
+Two kinds of store keep other shapes (see ``bucketed_latest_fold``):
+IMMUTABLE stores append rows verbatim with the ``_b`` fence and read
+them without a merge; INDEX stores (``bucket_col`` != ``key``, the ER
+cluster index) keep READ-REWRITE of touched buckets, because their
+pinned exchange-free member lookups need one row per key on disk.
+Moving both onto the merged-on-read table, behind a manifest, is what
+remains of one keyed-state table.
 
-Self-read-overwrite assumption: each fold reads ``state_dir`` and
-writes ``mode('overwrite')`` back to the SAME path in one action — a
-pattern older Spark releases reject ("Cannot overwrite a path that is
-also being read from"). It is safe here because the Spark 4 file-source
-V2 write stages the whole output under a job-attempt directory and
-only moves files at job commit, after every read task of the same
-action has finished; the matview maintenance queries rely on the same
-behavior. It is still not crash-atomic on a plain filesystem — a crash
-mid-commit can lose touched buckets' standing rows (untouched buckets
-are never at risk). On an object store, or wherever mid-commit crashes
-must be survivable, ride a transactional table format instead; this
-module is the layout/algorithm layer, not the commit protocol.
+Self-read-overwrite assumption: compaction, the read-rewrite path and
+the tombstone sweep read ``state_dir`` and write ``mode('overwrite')``
+back to the SAME path in one action. That is safe because the Spark 4
+file-source V2 write stages its output under a job-attempt directory
+and moves files only at job commit, after every read task of the
+action has finished. It is not crash-atomic on a plain filesystem: a
+crash mid-commit can lose the rewritten buckets' standing rows.
+Appends are not at risk (a crashed append leaves only staging files),
+so on the log-structured layouts the caveat applies to compaction
+alone. Where mid-commit crashes must be survivable, ride a
+transactional table format; this module is the layout/algorithm
+layer, not the commit protocol.
 
 Layout contract on disk: ``bucket=<i>/`` parquet partition directories
-plus two tiny driver-side markers — ``_n_buckets`` (the bucket count
-the layout was written with; folds check it and refuse a mismatched
-configuration, which would prune standing reads with the wrong modulus
-and silently duplicate keys) and ``_epoch`` (the checkpoint identity
-fencing the additive fold's ``_b`` batch-id stamps; see
-``_check_epoch``). ``rebucket_state`` carries both markers across a
-migration.
+plus tiny driver-side markers — ``_n_buckets`` (the bucket count the
+layout was written with; folds check it and refuse a mismatched
+configuration, which would place a key's rows in the wrong bucket),
+``_epoch`` (the checkpoint identity fencing the monoid fold's ``_b``
+stamps; see ``_check_epoch``) and ``_monoid.json`` (the merge
+sidecar). ``rebucket_state`` carries them across a migration.
 
-Schema evolution envelope (both folds): ADD-only, batch-authoritative.
-The standing read uses the batch's schema explicitly, so a column the
-batch adds is NULL-filled from old files, and a column the batch stops
-sending is dropped from TOUCHED buckets at their next rewrite
-(untouched buckets keep their bytes until touched — ``read_state``
-merges footers so mixed-schema layouts read consistently). For the
-additive fold a newly added sum column is NULL (not 0) for keys with
-no contribution since the column appeared — "never observed", not
-"observed zero".
+Schema evolution envelope: ADD-only, batch-authoritative. The sidecar
+records the union of every segment's schema (a column never leaves
+it), and ``read_state`` reads through it without a footer scan: a
+column the batch adds reads NULL from older segments; a column the
+batch stops sending reads NULL for rows written since, and leaves a
+bucket's files at that bucket's next compaction (which reads standing
+rows through the batch's schema). The read-rewrite path drops such a
+column from touched buckets at their next rewrite. For a monoid fold
+a newly added column is NULL (not 0) for keys with no contribution
+since it appeared — "never observed", not "observed zero". Layouts
+without a sidecar (immutable and index stores, and layouts written
+before the sidecar held a schema) are read with ``mergeSchema``.
 """
 
 from __future__ import annotations
@@ -83,9 +92,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
-    "bucketed_additive_fold",
     "bucketed_latest_fold",
     "bucketed_monoid_fold",
     "compact_expired_tombstones",
@@ -102,7 +111,8 @@ _MONOID_FILE = "_monoid.json"
 #: batch that touches it next. Bounds both the read fan-in (read_state
 #: merges at most this many segments per bucket) and the replay fence
 #: scan (per-bucket max(_b) reads this many footers), at the cost of
-#: one bucket-local rewrite every K touches — the LSM trade. The right
+#: one bucket-local rewrite every K touches — the LSM trade. Shared by
+#: every append-mode layout (monoid, latest-wins, immutable). The right
 #: K is about merge amortization and is scale-independent, so it is a
 #: constant, not a setting.
 _COMPACT_SEGMENTS = 8
@@ -255,24 +265,68 @@ def _stamp_epoch(state_dir: str, epoch: str) -> None:
     os.replace(tmp, path)
 
 
-def _stamp_monoid(state_dir: str, key: str, cols: dict[str, str]) -> None:
-    """Stamp (or refresh) the monoid layout's merge sidecar: the key
-    and per-column ops ``read_state`` needs to fold the log-structured
-    segments back into one row per key. Batch-authoritative like the
-    schema envelope — when a fold's ``cols`` evolve, the sidecar
-    follows. Driver-side, one tiny JSON file, rewritten only on
-    change."""
-    doc = {"key": key, "cols": dict(cols)}
+def _read_sidecar(state_dir: str) -> dict | None:
+    """The ``_monoid.json`` merge sidecar of a log-structured layout
+    (``{"key", "cols" | "order", "schema"}``), or None."""
     path = os.path.join(state_dir, _MONOID_FILE)
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as f:
-            if f.read() == json.dumps(doc):
-                return
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def _stamp_sidecar(s, state_dir: str, doc: dict, schema: StructType) -> None:
+    """Stamp (or refresh) a log-structured layout's merge sidecar:
+    ``doc`` is the key and the merge (per-column monoid ops, or the
+    latest-wins order columns) ``read_state`` needs to fold segments
+    back into one row per key. Batch-authoritative like the schema
+    envelope — when a fold's merge evolves, the sidecar follows.
+
+    It also records the union schema of every segment written, so
+    ``read_state`` reads with an explicit schema and launches no
+    footer-merging job. The union is add-only: a field keeps the type
+    it was first recorded with and never leaves. A layout that predates
+    the schema record seeds it from its standing footers, once. Called
+    BEFORE the segment write: a crash in between leaves a recorded
+    column no file carries yet, which reads NULL — never a written
+    column the read would drop. Driver-side, one tiny JSON file,
+    rewritten only on change."""
+    old = _read_sidecar(state_dir)
+    if old is not None and "schema" in old:
+        fields = old["schema"]["fields"]
+    elif _has_state(state_dir):
+        fields = json.loads(
+            s.read.option("mergeSchema", "true").parquet(state_dir).schema.json()
+        )["fields"]
+    else:
+        fields = []
+    names = {f["name"] for f in fields}
+    fields = fields + [
+        {**f, "nullable": True}
+        for f in json.loads(schema.json())["fields"]
+        if f["name"] not in names
+    ]
+    new = {**doc, "schema": {"type": "struct", "fields": fields}}
+    if new == old:
+        return
     os.makedirs(state_dir, exist_ok=True)
+    path = os.path.join(state_dir, _MONOID_FILE)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        f.write(json.dumps(doc))
+        f.write(json.dumps(new))
     os.replace(tmp, path)
+
+
+def _scan(spark, state_dir: str, doc: dict | None) -> DataFrame:
+    """Every row of the layout, ``bucket`` included: through the
+    sidecar's union schema when there is one (no schema job), else
+    merging footers (a mid-evolution layout is legitimately
+    mixed-schema, so the read must not trust one file)."""
+    if doc is not None and "schema" in doc:
+        return spark.read.schema(StructType.fromJson(doc["schema"])).parquet(
+            state_dir
+        )
+    return spark.read.option("mergeSchema", "true").parquet(state_dir)
 
 
 def state_bucket_count(state_dir: str, default: int) -> int:
@@ -353,6 +407,102 @@ def _check_layout(state_dir: str, n_buckets: int, spark, key: str) -> None:
     os.replace(tmp, path)
 
 
+#: merge operators a fenced fold may carry per column. Correctness
+#: requirement: the ``_b`` fence applies each batch to each bucket
+#: EXACTLY once, so the op need not be idempotent — it must only be
+#: associative and commutative across batches (every entry here is),
+#: with NULL = "no contribution" (Spark aggregates ignore NULLs, so a
+#: key silent in a batch, or a column added mid-evolution, composes
+#: correctly on every op, not just sum).
+_MONOID_OPS = {
+    "sum": F.sum,
+    "min": F.min,
+    "max": F.max,
+    "bit_or": F.bit_or,
+    "bit_and": F.bit_and,
+}
+
+
+def _latest_winners(df: DataFrame, key: str, order_cols, by=()) -> DataFrame:
+    """One row per (``key``, ``*by``): the row ranking highest on
+    ``order_cols``, via ``max_by`` over the order struct. One
+    partially-aggregating HashAggregate (the map side pre-selects each
+    key's local winner, so an exchange carries at most one row per key
+    per map partition, and no sort runs). Struct comparison is
+    lexicographic by field with NULL fields smallest, i.e. the desc /
+    NULLS LAST ranking; ties are impossible across distinct payloads by
+    the caller contract (total (order_cols, key) ranking), and
+    replay-duplicate rows tie only with byte-identical rows. Columns
+    keep ``df``'s order."""
+    payload = [c for c in df.columns if c != key and c not in by]
+    return (
+        df.groupBy(key, *by)
+        .agg(
+            F.max_by(
+                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
+            ).alias("_w")
+        )
+        .select(key, *by, "_w.*")
+        .select(*df.columns)
+    )
+
+
+def _merge(doc: dict, df: DataFrame, by=()) -> DataFrame:
+    """Fold a log-structured layout's rows to one row per (key,
+    ``*by``) with the merge its sidecar ``doc`` declares. Compaction
+    and the tombstone sweep merge per (key, bucket) and keep the
+    monoid's ``_b`` fence (max per key, so the per-bucket max(_b) stays
+    exactly where it was); ``read_state`` merges per key and drops
+    it."""
+    key = doc["key"]
+    if "order" in doc:
+        return _latest_winners(df, key, doc["order"], by)
+    aggs = [_MONOID_OPS[op](c).cast("long").alias(c) for c, op in doc["cols"].items()]
+    if by:
+        aggs.append(F.max("_b").alias("_b"))
+    return df.groupBy(key, *by).agg(*aggs)
+
+
+def _append_segments(
+    s, state_dir: str, part: DataFrame, width: int, merge, touched=None
+) -> None:
+    """Append ``part`` — already routed with ``repartitionById(width,
+    "bucket")`` — as one new segment per bucket it holds. A bucket of
+    ``part`` whose segment count has reached ``_COMPACT_SEGMENTS`` is
+    instead rewritten, segments plus the batch, through ``merge`` (one
+    row per key, or rows verbatim for the immutable stores) as ONE
+    file. ``touched`` is the exact bucket set of ``part`` when the
+    caller knows it; otherwise it is collected, and only when some
+    bucket is at the threshold. The append reads no standing data, so
+    without a compaction due this is one job."""
+    over = {b for b, c in _bucket_file_counts(state_dir).items() if c >= _COMPACT_SEGMENTS}
+    if over and touched is None:
+        with _fold_confs(s, width):
+            part = part.localCheckpoint(eager=True)
+            touched = tuple(
+                sorted(r[0] for r in part.select("bucket").distinct().collect())
+            )
+    compact = sorted(over & set(touched)) if over else []
+    if touched is None or len(compact) < len(touched):
+        with _fold_confs(s, width):
+            (
+                part.filter(~F.col("bucket").isin(compact)) if compact else part
+            ).write.partitionBy("bucket").mode("append").parquet(state_dir)
+    if compact:
+        standing = (
+            s.read.schema(part.schema)
+            .parquet(state_dir)
+            .filter(F.col("bucket").isin(compact))
+        )
+        merged = merge(
+            standing.unionByName(part.filter(F.col("bucket").isin(compact)))
+        ).repartition(len(compact), F.col("bucket"))
+        with _fold_confs(s, width):
+            merged.write.partitionBy("bucket").mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).parquet(state_dir)
+
+
 def bucketed_latest_fold(
     state_dir: str,
     *,
@@ -364,95 +514,94 @@ def bucketed_latest_fold(
     immutable: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """Build a foreachBatch(fold) maintaining a latest-wins keyed state
-    table at ``state_dir``, bucket-partitioned; per batch only touched
-    buckets are read and rewritten. ``order_cols`` rank DESC and must
-    be total per key (append a unique id). ``touched_log``, if given,
-    receives (batch_id, touched_buckets) — driver-side, bounded by
-    n_buckets per entry — so tests and ops can assert write locality.
+    table at ``state_dir``, bucket-partitioned. ``order_cols`` rank
+    DESC and must be total per key (append a unique id).
+    ``touched_log``, if given, receives (batch_id, touched_buckets) —
+    driver-side, bounded by n_buckets per entry, one extra collect per
+    call — so tests and ops can assert write locality. The returned
+    fold also takes ``touched_hint``: a caller-computed EXACT touched
+    set (the driver-side ``spark_bucket`` twin is bit-equal to
+    pmod(xxhash64(·)), pinned in tests), used instead of that collect.
 
-    ``bucket_col`` decouples co-location from identity: by default the
-    layout buckets on ``key`` (pure keyed state), but an INDEX-shaped
-    consumer — the streaming ER record store, where rows are keyed by
-    record id but every LOOKUP is by block key — buckets on the lookup
-    column instead, so a reader pruning to a block's bucket finds ALL
-    records of that block in one partition directory. The column rides
-    the layout stamp (the ``_n_buckets`` check verifies bucket ==
-    pmod(xxhash64(bucket_col)) on adoption), and latest-wins dedup
-    still runs per ``key``.
+    Layout (bucketing on the key itself, the default): an append-only
+    log of per-(key, bucket) winners, ``max_by(struct(payload),
+    struct(order_cols))``, one segment per touched bucket per batch;
+    ``read_state`` merges a key's segments with the same ``max_by``.
+    Every call is ONE job whatever the batch id, and writes O(|batch|)
+    bytes. There is no ``_b`` fence and no ``_epoch``: the merge is
+    idempotent, so a replayed batch, or a fresh checkpoint whose ids
+    restart at 0, appends a duplicate segment the merge absorbs (a
+    fence without an epoch would make a re-pointed checkpoint silently
+    drop its early batches as "replays"). Compaction at
+    ``_COMPACT_SEGMENTS`` merges a bucket's segments plus the batch to
+    one row per key; a column the batch stopped sending leaves the
+    bucket's files then. Layouts written by the earlier read-rewrite
+    fold (one row per key) upgrade in place as a single segment.
+    Readers that bypass ``read_state`` must resolve each key to its
+    newest version themselves (the ER label readers do).
+
+    ``bucket_col`` decouples co-location from identity: an INDEX-shaped
+    consumer — the streaming ER cluster index, keyed by (doc, cluster)
+    but looked up by cluster — buckets on the lookup column, so a
+    reader pruning to a cluster's bucket finds ALL its members in one
+    partition directory; latest-wins still runs per ``key``, and the
+    ``_n_buckets`` check verifies bucket == pmod(xxhash64(bucket_col))
+    on adoption. These stores keep READ-REWRITE — per batch, the
+    touched buckets' standing rows (a static partition filter) ∪ the
+    batch are merged by ``max_by`` per key and the touched buckets
+    rewritten with dynamic partition overwrite — because their member
+    lookups read the directory in a pinned exchange-free plan and
+    filter ``alive`` per row, so they need one row per key on disk.
 
     ``bucket_col`` CONTRACT (ADVICE r12): the column must be a pure
-    function of the KEY — equivalently, immutable per key across
-    versions. Latest-wins placement is per row, so if a key's later
-    version computed a DIFFERENT bucket_col (a record update changing
-    its block key), the old version would sit untouched in the old
-    bucket and ``read_state`` would silently return duplicate rows for
-    that key; the per-row ``_n_buckets`` layout check can never catch
-    this (each row's bucket matches its own bucket_col). The fold
-    therefore ASSERTS functional dependence per batch: within the rows
-    it can see (standing rows of touched buckets ∪ the batch), every
-    key must map to exactly one bucket, or the fold dies loudly
-    instead of mis-placing state. The one blind spot — a key whose
-    stale version lives in a bucket this batch never touches — is
-    structural (checking it would need a full-state scan per batch);
-    callers needing mutable placement keys must tombstone the old
-    bucket explicitly or bucket on the key itself.
+    function of the KEY (immutable per key across versions). Placement
+    is per row, so a key whose later version computed a DIFFERENT
+    bucket_col would leave its old version untouched in the old bucket,
+    and ``read_state`` would silently return duplicate rows; the per-
+    row ``_n_buckets`` check can never catch this. The read-rewrite
+    fold therefore ASSERTS functional dependence over the rows it can
+    see (standing rows of touched buckets ∪ the batch) and dies loudly
+    on a key in two buckets. The blind spot — a stale version in a
+    bucket this batch never touches — would need a full-state scan per
+    batch; callers needing mutable placement keys must tombstone the
+    old bucket explicitly or bucket on the key itself.
 
-    ``immutable=True`` (r14 optimization round): for stores whose rows
-    NEVER change once written — element/band/vector/record stores,
-    where ``order_cols`` is the key itself and latest-wins dedup is
-    vacuous — the fold appends O(|batch|) bytes instead of rewriting
-    every touched bucket's full contents. At 100 TB that is the
-    difference between O(delta) and O(state/n_buckets × touched) write
-    amplification per trigger (measured 2.3× faster at fixture scale
-    on the largest element store, and asymptotically the only shape
-    that scales). Mechanics: rows are stamped with a ``_b`` batch-id
-    DATA column (the monoid fold's fence, reused) and appended under
-    their bucket partitions; a replayed batch reads the touched
-    buckets' per-bucket max(_b) (one column-pruned scan) and skips
-    buckets already at/above its id — append never double-applies.
-    ``read_state`` already drops ``_b``; probes select explicit
-    columns. Contract (caller-guaranteed): a key's row — including its
-    bucket_col — is identical wherever it reappears, so skipped
-    re-appends lose nothing; the schema is frozen for the store's
-    lifetime (append never rewrites old files — evolve via
-    rebucket_state, which compacts). Batch-internal key uniqueness is
-    no longer taken on faith (ADVICE r14): the append rides a
-    per-(key, bucket) aggregation — satisfied by the write's own
-    bucket partitioning, so it adds NO exchange — that dies loudly on
-    a key duplicated within its bucket instead of silently appending
-    duplicate state. The one blind spot, a key whose bucket_col drifts
-    ACROSS buckets within a batch, would need an exchange on the key
-    to check; it remains contract (the mutable path's FD assert had
-    the mirror-image blind spot: a key whose stale version lives in an
-    untouched bucket).
+    ``immutable=True`` (r14): for stores whose rows NEVER change once
+    written — element/band/vector/record stores, where ``order_cols``
+    is the key itself — rows are appended verbatim, stamped with a
+    ``_b`` batch-id DATA column (the monoid fold's fence); a replayed
+    batch reads the touched buckets' per-bucket max(_b) (a
+    column-pruned scan) and skips buckets already at/above its id.
+    ``read_state`` drops ``_b``. Contract (caller-guaranteed): a key's
+    row — including its bucket_col — is identical wherever it
+    reappears, so skipped re-appends lose nothing; the schema is frozen
+    for the store's lifetime (evolve via rebucket_state). Batch-internal
+    key uniqueness is checked (ADVICE r14): the append rides a
+    per-(key, bucket) aggregation — satisfied by the write's own bucket
+    partitioning, so it adds NO exchange — that dies loudly on a key
+    duplicated within its bucket (a key whose bucket_col drifts ACROSS
+    buckets within a batch would need an exchange to check; it remains
+    contract). Compaction carries rows and their ``_b`` verbatim, so
+    the per-bucket fence is preserved exactly.
 
-    File growth is bounded (r15): each batch appends ≤1 file per
-    touched bucket, and a touched bucket whose segment count reaches
-    ``_COMPACT_SEGMENTS`` is folded down to ONE file by that same
-    batch (rows and their ``_b`` stamps carried verbatim, so the
-    per-bucket fence — max(_b) — is preserved exactly); the fence scan
-    therefore reads a bounded number of footers per bucket forever.
-
-    r15, committed-frontier fast path (both append-mode folds): within
-    one fold closure batch ids are monotone and the closure is the
-    state's only writer (the foreachBatch contract), so a batch id
-    STRICTLY ABOVE the closure's last-committed id cannot be a replay
-    — the touched-bucket collect and the fence scan are skipped and
-    the whole fold is ONE job (the append write). The first call of a
-    closure (a fresh process — exactly where a replay can arrive) and
-    any id at/below the frontier take the fenced path unchanged.
-    ``touched_log`` also disables the fast path: its contract is the
-    exact per-batch touched list.
+    Committed-frontier fast path (immutable stores and the monoid
+    fold): within one fold closure batch ids are monotone and the
+    closure is the state's only writer (the foreachBatch contract), so
+    a batch id STRICTLY ABOVE the closure's last-committed id cannot be
+    a replay — the touched collect and the fence scan are skipped and
+    the fold is ONE job. The first call of a closure (a fresh process —
+    exactly where a replay can arrive), any id at/below the frontier,
+    and a call with ``touched_log`` take the fenced path.
     """
     bcol = bucket_col or key
+    rewrite = not immutable and bcol != key
+    layout = {"key": key, "order": list(order_cols)}
     frontier: list[int | None] = [None]  # this closure's committed max id
 
     def _imm_append(s, rows, batch_id: int, todo, width: int) -> None:
-        """Append-mode write: batch rows (restricted to ``todo`` when
-        given) land as one new segment per bucket; touched buckets at
-        the segment threshold are compacted in the same call. The
-        per-(key, bucket) uniqueness guard rides the append's own
-        partitioning (see docstring)."""
+        """Append-mode write of batch rows (restricted to ``todo`` when
+        given), through the per-(key, bucket) uniqueness guard that
+        rides the append's own partitioning (see docstring)."""
         out = rows if todo is None else rows.filter(
             F.col("bucket").isin(list(todo))
         )
@@ -481,44 +630,15 @@ def bucketed_latest_fold(
             .filter(F.col("_n") == 0)
             .select(*out.columns)
         )
-        counts = _bucket_file_counts(state_dir)
-        over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
-        if over and todo is None:
-            with _fold_confs(s, width):
-                todo = tuple(
-                    sorted(
-                        r[0]
-                        for r in rows.select("bucket").distinct().collect()
-                    )
-                )
-        compact = sorted(over & set(todo)) if todo is not None else []
-        append_part = (
-            checked
-            if not compact
-            else checked.filter(~F.col("bucket").isin(compact))
-        )
-        plain = todo is not None and len(compact) == len(todo)
-        if not plain:
-            with _fold_confs(s, width):
-                append_part.write.partitionBy("bucket").mode("append").parquet(
-                    state_dir
-                )
-        if compact:
-            # fold the bucket's segments + this batch down to one file;
-            # every row keeps its own _b, so per-bucket max(_b) — the
-            # fence — is carried exactly
-            standing = (
-                s.read.schema(checked.schema)
-                .parquet(state_dir)
-                .filter(F.col("bucket").isin(compact))
+        _append_segments(s, state_dir, checked, width, lambda df: df, todo)
+
+    def _touched(s, rows, width: int, touched_hint) -> tuple[int, ...]:
+        if touched_hint is not None:
+            return tuple(sorted(set(touched_hint)))
+        with _fold_confs(s, width):
+            return tuple(
+                sorted(r[0] for r in rows.select("bucket").distinct().collect())
             )
-            merged = standing.unionByName(
-                checked.filter(F.col("bucket").isin(compact))
-            ).repartition(len(compact), F.col("bucket"))
-            with _fold_confs(s, width):
-                merged.write.partitionBy("bucket").mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).parquet(state_dir)
 
     def fold(
         batch_df: DataFrame, batch_id: int, touched_hint=None
@@ -529,6 +649,25 @@ def bucketed_latest_fold(
         rows = batch_df.withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bcol)), F.lit(n_buckets)).cast("int")
         )
+        if not immutable and not rewrite:
+            touched = None
+            if touched_log is not None or touched_hint is not None:
+                touched = _touched(s, rows, width, touched_hint)
+            if touched_log is not None:
+                touched_log.append((batch_id, touched))
+            if touched is not None and not touched:
+                return  # empty batch (e.g. a no-data trigger): no-op
+            _stamp_sidecar(s, state_dir, layout, rows.schema)
+            _append_segments(
+                s,
+                state_dir,
+                _latest_winners(rows, key, order_cols, ("bucket",))
+                .repartitionById(width, "bucket"),
+                width,
+                lambda df: _latest_winners(df, key, order_cols, ("bucket",)),
+                touched,
+            )
+            return
         if (
             immutable
             and touched_log is None
@@ -541,18 +680,7 @@ def bucketed_latest_fold(
             _imm_append(s, rows, batch_id, None, width)
             frontier[0] = batch_id
             return
-        if touched_hint is not None:
-            # caller-computed EXACT touched set (driver-local batches:
-            # the label step knows its change rows) — the driver-side
-            # spark_bucket twin is bit-equal to pmod(xxhash64(·)),
-            # pinned in tests. Must be exact: a superset only wastes a
-            # pruned read; a SUBSET would silently duplicate keys.
-            touched = tuple(sorted(set(touched_hint)))
-        else:
-            with _fold_confs(s, width):
-                touched = tuple(
-                    sorted(r[0] for r in rows.select("bucket").distinct().collect())
-                )
+        touched = _touched(s, rows, width, touched_hint)
         if touched_log is not None:
             touched_log.append((batch_id, touched))
         if not touched:  # empty batch (e.g. a no-data trigger): no-op
@@ -581,6 +709,7 @@ def bucketed_latest_fold(
             _imm_append(s, rows, batch_id, todo, width)
             frontier[0] = max(frontier[0] or -1, batch_id)
             return
+        # read-rewrite (index stores, bucket_col != key)
         if _has_state(state_dir):
             # the batch schema is authoritative (add-only evolution, see
             # module docstring): reading standing files THROUGH it NULL-
@@ -590,69 +719,43 @@ def bucketed_latest_fold(
                 F.col("bucket").isin(list(touched))
             )
             rows = standing.unionByName(rows)
-        # latest-wins via max_by over the (order_cols) struct — r14
-        # optimization round: one partially-aggregating HashAggregate
-        # replaces the previous Exchange+Sort+Window(row_number) (the
-        # map side pre-selects each key's local winner, so the exchange
-        # carries at most one row per key per map partition and no full
-        # sort runs; measured ~20% off every fold write at fixture
-        # scale, and strictly fewer shuffled bytes at any scale — guide
-        # §2.3 "aggregate before you shuffle"). Winner identity is
-        # unchanged: struct comparison is lexicographic by field with
-        # NULL fields smallest, exactly the desc/NULLS-LAST row_number
-        # ranking; ties are impossible across distinct payloads by the
-        # caller contract (total (order_cols, key) ranking), and
-        # replay-duplicate rows tie only with byte-identical rows.
-        payload = [c for c in rows.columns if c != key]
-        aggs = [
-            F.max_by(
-                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
-            ).alias("_w")
-        ]
         # bucket_col functional-dependence assert (ADVICE r12): rides
         # the SAME per-key aggregation (min/max of bucket in the same
         # partial agg — no extra exchange) and is folded into a filter
         # so column pruning cannot elide it — a key seen in two buckets
         # among the rows this batch reads is a contract violation that
-        # would otherwise become silent duplicate state. Skipped when
-        # bucketing on the key itself (FD by construction).
-        fd_check = bucket_col is not None and bucket_col != key
-        if fd_check:
-            aggs += [
-                F.min("bucket").alias("_bmin"),
-                F.max("bucket").alias("_bmax"),
-            ]
-        g = rows.groupBy(key).agg(*aggs)
-        if fd_check:
-            fd_ok = F.coalesce(
-                F.assert_true(
-                    F.col("_bmin") == F.col("_bmax"),
-                    F.concat(
-                        F.lit(
-                            f"bucketed_latest_fold at {state_dir}: bucket_col "
-                            f"{bcol!r} is not a pure function of key {key!r} "
-                            "— one key maps to multiple buckets, which "
-                            "latest-wins placement would turn into silent "
-                            "duplicate rows. Offending key: "
-                        ),
-                        F.col(key).cast("string"),
+        # would otherwise become silent duplicate state
+        payload = [c for c in rows.columns if c != key]
+        g = rows.groupBy(key).agg(
+            F.max_by(
+                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
+            ).alias("_w"),
+            F.min("bucket").alias("_bmin"),
+            F.max("bucket").alias("_bmax"),
+        )
+        fd_ok = F.coalesce(
+            F.assert_true(
+                F.col("_bmin") == F.col("_bmax"),
+                F.concat(
+                    F.lit(
+                        f"bucketed_latest_fold at {state_dir}: bucket_col "
+                        f"{bcol!r} is not a pure function of key {key!r} "
+                        "— one key maps to multiple buckets, which "
+                        "latest-wins placement would turn into silent "
+                        "duplicate rows. Offending key: "
                     ),
-                ).cast("int"),
-                F.lit(0),
-            )
-        else:
-            fd_ok = F.lit(0)
+                    F.col(key).cast("string"),
+                ),
+            ).cast("int"),
+            F.lit(0),
+        )
         merged = (
             g.withColumn("_fd", fd_ok)
             .filter(F.col("_fd") == 0)
             .select(key, "_w.*")
             .select(*rows.columns)  # restore the layout's column order
-            # cluster writers by bucket: ONE file per touched bucket per
-            # batch instead of (shuffle tasks × buckets) shards — the
-            # small-file guard; the aggregation already shuffled by key,
-            # so this moves only the touched buckets' winners once more.
-            # Width = min(buckets, cores), and it is still one file per
-            # touched bucket per batch (see _fold_width)
+            # one file per touched bucket per batch, at width
+            # min(buckets, cores) (see _fold_width)
             .repartitionById(width, "bucket")
         )
         with _fold_confs(s, width):
@@ -667,77 +770,6 @@ def bucketed_latest_fold(
     return fold
 
 
-def bucketed_additive_fold(
-    state_dir: str,
-    *,
-    key: str,
-    sum_cols: tuple[str, ...],
-    n_buckets: int = 16,
-    touched_log: list[tuple[int, tuple[int, ...]]] | None = None,
-    epoch: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Build a foreachBatch(fold) maintaining an ADDITIVE keyed state
-    table (running SUMs per key; encode COUNT as a lit(1) column and
-    deletes/retractions as signed values) with the same bucket-local
-    write discipline as ``bucketed_latest_fold``.
-
-    Unlike latest-wins, an additive merge is NOT naturally idempotent:
-    a replayed batch would double-add. Fencing is stored IN the state
-    itself — every row carries ``_b``, the batch_id whose append last
-    wrote its bucket. Per batch: buckets whose standing ``max(_b)`` is
-    already >= batch_id are SKIPPED entirely (not even touched — a
-    full replay leaves their files byte-identical, which the tests pin
-    at the file level); the rest receive the batch's per-key partials
-    as a new log segment stamped ``_b = batch_id`` (see
-    :func:`bucketed_monoid_fold` for the r15 log-structured layout —
-    reads merge segments, a threshold compacts them). Because a
-    bucket's partition commit is atomic at job commit, a replay
-    observes either the pre-batch state (re-applies — correct) or the
-    post-batch stamp (skips — correct) per bucket. On an object store
-    without atomic job commit the same discipline rides a
-    transactional table format (Delta / Iceberg MERGE), where data and
-    fence commit together.
-
-    The batch is partially aggregated per (key, bucket) BEFORE the
-    merge — map-side combine keeps the shuffle O(distinct batch keys),
-    and the standing read prunes to touched buckets, so per-batch cost
-    is O(|batch| + touched buckets), never O(|state|).
-
-    The ``_b`` fence is only meaningful within ONE monotone batch-id
-    sequence — i.e. one checkpoint. Pass ``epoch`` (any stable string
-    identifying the checkpoint, e.g. its directory path) and the fold
-    stamps the state directory with it and REFUSES to merge when a
-    different epoch meets standing state, instead of silently
-    swallowing the restarted ids 0..N as replays (see ``_check_epoch``).
-    ``epoch=None`` keeps the unguarded legacy behavior for callers that
-    manage the invariant themselves.
-    """
-    return bucketed_monoid_fold(
-        state_dir,
-        key=key,
-        cols={c: "sum" for c in sum_cols},
-        n_buckets=n_buckets,
-        touched_log=touched_log,
-        epoch=epoch,
-    )
-
-
-#: merge operators a fenced fold may carry per column. Correctness
-#: requirement: the ``_b`` fence applies each batch to each bucket
-#: EXACTLY once, so the op need not be idempotent — it must only be
-#: associative and commutative across batches (every entry here is),
-#: with NULL = "no contribution" (Spark aggregates ignore NULLs, so a
-#: key silent in a batch, or a column added mid-evolution, composes
-#: correctly on every op, not just sum).
-_MONOID_OPS = {
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-    "bit_or": F.bit_or,
-    "bit_and": F.bit_and,
-}
-
-
 def bucketed_monoid_fold(
     state_dir: str,
     *,
@@ -747,52 +779,50 @@ def bucketed_monoid_fold(
     touched_log: list[tuple[int, tuple[int, ...]]] | None = None,
     epoch: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The additive fold generalized to per-column MONOIDS: ``cols``
-    maps each state column to its merge op — ``sum`` / ``min`` /
-    ``max`` / ``bit_or`` / ``bit_and`` — and the fold maintains, per
-    key, the op-fold of every contribution ever delivered, under the
-    exact same bucket-local write discipline, ``_b`` replay fence,
-    checkpoint-epoch stamp, layout guard and ADD-only schema-evolution
-    envelope as :func:`bucketed_additive_fold` (which is now the
-    all-``sum`` special case of this).
-
-    Why the fence makes this sound for NON-idempotent, NON-invertible
-    ops: the per-bucket ``_b`` stamp guarantees each batch's partial is
-    merged into each bucket exactly once, so the only algebra the op
-    must supply is associativity + commutativity ACROSS batches (batch
-    arrival order is not deterministic under retries). Sum, min, max
-    and the bitwise ops all qualify; means/variances ride as (sum,
-    count) pairs; distinct-ish state rides bit_or over register words
-    (the portable-HLL/bitmap pattern). What canNOT ride: any op needing
-    retraction (min over a stream with DELETES — a retracted minimum is
-    unrecoverable without a full re-fold) — that is matview territory,
-    not a fold.
-
-    All state columns are ``long`` (the fold casts) — encode dates as
-    epoch days, decimals as scaled integers, register words as longs;
-    exactness end-to-end is the point of the fenced fold.
+    """Build a foreachBatch(fold) maintaining per-column MONOID keyed
+    state: ``cols`` maps each state column to its merge op — ``sum`` /
+    ``min`` / ``max`` / ``bit_or`` / ``bit_and`` — and the fold keeps,
+    per key, the op-fold of every contribution ever delivered (running
+    sums are ``cols={c: "sum" ...}``; encode COUNT as a lit(1) column
+    and deletes/retractions as signed values). All state columns are
+    ``long`` (the fold casts) — encode dates as epoch days, decimals as
+    scaled integers, register words as longs.
 
     Cost shape (r15, log-structured): per batch, one map-side-combined
-    partial aggregation of the batch (O(distinct batch keys) on the
-    exchange) APPENDED as a new segment under the touched bucket
-    partitions — the standing contents are no longer read or rewritten
-    per trigger (the same O(delta) discipline the immutable latest
-    fold got in r14, here for MUTABLE monoid state: the segments are
-    partials and the monoid's own associativity merges them). The
-    folded value is produced on READ: ``read_state`` recognizes the
-    layout via the ``_monoid.json`` sidecar (key + per-column ops,
-    stamped by this fold) and merges segments with the declared ops —
-    reads pay one aggregation; writes stop paying O(touched-bucket
-    contents) every trigger. A touched bucket whose segment count
-    reaches ``_COMPACT_SEGMENTS`` is folded down to one segment by
-    that same batch (its rows re-aggregated per key; the compacted
-    rows carry max(_b) of their contributors per key, so the
-    per-bucket fence is preserved exactly). The ``_b`` replay fence,
-    checkpoint-epoch stamp, layout guard and ADD-only schema-evolution
-    envelope are unchanged — a replayed batch's partial is simply
-    never appended to a bucket whose fence already covers it. Standing
-    pre-r15 layouts (fully-merged rows) upgrade in place: a merged row
-    is just a segment whose value happens to cover every prior batch.
+    partial aggregation (O(distinct batch keys) on the exchange)
+    APPENDED as a new segment per touched bucket; ``read_state`` merges
+    the segments with the ops recorded in the ``_monoid.json`` sidecar.
+    Compaction at ``_COMPACT_SEGMENTS`` re-aggregates a bucket per key,
+    each compacted row carrying max(_b) of its contributors, so the
+    per-bucket fence is preserved exactly. Standing pre-r15 layouts
+    (fully-merged rows) upgrade in place: a merged row is a segment
+    whose value covers every prior batch.
+
+    These ops are not idempotent — a replayed batch would double-add —
+    so fencing is stored IN the state: every row carries ``_b``, the
+    batch_id that wrote it. Touched buckets whose standing ``max(_b)``
+    is already >= batch_id are SKIPPED (a full replay leaves their
+    files byte-identical, which the tests pin); the rest get the
+    batch's partials stamped ``_b = batch_id``. A bucket's partition
+    commit is atomic at job commit, so a replay observes either the
+    pre-batch state (re-applies) or the post-batch stamp (skips). On an
+    object store without atomic job commit the same discipline rides a
+    transactional table format, where data and fence commit together.
+    Since each batch reaches each bucket exactly once, the op only
+    needs associativity + commutativity ACROSS batches (arrival order
+    is not deterministic under retries); means ride as (sum, count),
+    distinct-ish state as bit_or over register words. What canNOT ride:
+    an op needing retraction (min over a stream with DELETES) — that is
+    matview territory, not a fold.
+
+    The fence is only meaningful within ONE monotone batch-id sequence
+    — one checkpoint. Pass ``epoch`` (any stable string identifying the
+    checkpoint, e.g. its directory path) and the fold stamps the state
+    directory with it and REFUSES to merge when a different epoch meets
+    standing state, instead of silently swallowing the restarted ids
+    0..N as replays (see ``_check_epoch``). ``epoch=None`` keeps the
+    unguarded behavior for callers that manage the invariant
+    themselves.
 
     The committed-frontier fast path (see ``bucketed_latest_fold``)
     applies: a batch id strictly above this closure's last committed
@@ -805,55 +835,21 @@ def bucketed_monoid_fold(
             f"unsupported monoid op(s) {bad}; supported: {sorted(_MONOID_OPS)}"
         )
     aggs = [_MONOID_OPS[op](c).cast("long").alias(c) for c, op in cols.items()]
+    layout = {"key": key, "cols": dict(cols)}
     frontier: list[int | None] = [None]  # this closure's committed max id
 
-    def _append_segments(s, partial, batch_id: int, todo, width: int) -> None:
-        """Append the batch's partials (restricted to ``todo`` when
-        given) as one segment per touched bucket; compact any touched
-        bucket at the segment threshold in the same call."""
+    def _append(s, partial, todo, width: int) -> None:
         part = partial if todo is None else partial.filter(
             F.col("bucket").isin(list(todo))
         )
-        counts = _bucket_file_counts(state_dir)
-        over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
-        if over and todo is None:
-            with _fold_confs(s, width):
-                todo = tuple(
-                    sorted(
-                        r[0]
-                        for r in part.select("bucket").distinct().collect()
-                    )
-                )
-                part = part.localCheckpoint(eager=True)
-        compact = sorted(over & set(todo)) if todo is not None else []
-        if not (todo is not None and len(compact) == len(todo)):
-            with _fold_confs(s, width):
-                (
-                    part.filter(~F.col("bucket").isin(compact))
-                    if compact
-                    else part
-                ).repartitionById(width, "bucket").write.partitionBy(
-                    "bucket"
-                ).mode("append").parquet(state_dir)
-        if compact:
-            # fold the bucket's segments + this batch's partial down to
-            # one row per key; max(_b) per key keeps the bucket's fence
-            # (= max over rows) exactly where it was
-            standing = (
-                s.read.schema(partial.schema)
-                .parquet(state_dir)
-                .filter(F.col("bucket").isin(compact))
-            )
-            merged = (
-                standing.unionByName(part.filter(F.col("bucket").isin(compact)))
-                .groupBy(key, "bucket")
-                .agg(*aggs, F.max("_b").alias("_b"))
-                .repartition(len(compact), F.col("bucket"))
-            )
-            with _fold_confs(s, width):
-                merged.write.partitionBy("bucket").mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).parquet(state_dir)
+        _append_segments(
+            s,
+            state_dir,
+            part.repartitionById(width, "bucket"),
+            width,
+            lambda df: _merge(layout, df, ("bucket",)),
+            todo,
+        )
 
     def fold(
         batch_df: DataFrame, batch_id: int, touched_hint=None
@@ -861,7 +857,6 @@ def bucketed_monoid_fold(
         s = batch_df.sparkSession
         width = _fold_width(s, n_buckets)
         _check_layout(state_dir, n_buckets, s, key)
-        _stamp_monoid(state_dir, key, cols)
         adopted = False
         if epoch is not None:
             adopted = _check_epoch(state_dir, epoch)
@@ -873,6 +868,7 @@ def bucketed_monoid_fold(
             .agg(*aggs)
             .withColumn("_b", F.lit(batch_id).cast("long"))
         )
+        _stamp_sidecar(s, state_dir, layout, partial.schema)
         if (
             not adopted
             and touched_log is None
@@ -882,7 +878,7 @@ def bucketed_monoid_fold(
         ):
             # committed-frontier fast path: provably not a replay (see
             # bucketed_latest_fold) — one append job, no collects
-            _append_segments(s, partial, batch_id, None, width)
+            _append(s, partial, None, width)
             frontier[0] = batch_id
             return
         if touched_hint is not None:
@@ -955,7 +951,7 @@ def bucketed_monoid_fold(
             touched_log.append((batch_id, todo))
         if not todo:
             return
-        _append_segments(s, partial, batch_id, todo, width)
+        _append(s, partial, todo, width)
         frontier[0] = max(frontier[0] or -1, batch_id)
 
     # layout facts for callers that compute touched_hint driver-side
@@ -994,6 +990,15 @@ def compact_expired_tombstones(
     maintain a per-bucket min-tombstone-timestamp sidecar and prune to
     buckets behind the horizon.
 
+    Log-structured layouts (a ``_monoid.json`` sidecar) hold several
+    rows per key, and ``expired`` judges a key's MERGED row: each dirty
+    bucket is first merged to one row per key (a compaction, so its
+    files end up as one segment), and only then are expired rows
+    dropped. Dropping raw rows instead would let an older live version
+    outlive a newer expired tombstone and come back. The dirty probe
+    still reads raw rows; for latest-wins, a superseded expired row
+    only makes its bucket dirty, which merging then clears.
+
     A NULL ``expired`` (e.g. the predicate references a column that is
     NULL for some rows) means KEEP on every path: it neither marks a
     bucket dirty nor drops the row from a bucket made dirty by another
@@ -1010,14 +1015,13 @@ def compact_expired_tombstones(
     safe direction (GC delayed, never wrong). ``None`` keeps the full
     probe.
     """
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
     if probe_buckets is not None:
         probe_buckets = sorted(set(probe_buckets))
         if not probe_buckets:
             return ()
     expired = F.coalesce(expired, F.lit(False))
-    state = spark.read.option("mergeSchema", "true").parquet(state_dir)
+    doc = _read_sidecar(state_dir)
+    state = _scan(spark, state_dir, doc)
     if probe_buckets is not None:
         state = state.filter(F.col("bucket").isin(probe_buckets))
     dirty = tuple(
@@ -1028,7 +1032,10 @@ def compact_expired_tombstones(
     )
     if not dirty:
         return dirty
-    survivors = state.filter(F.col("bucket").isin(list(dirty))).filter(~expired)
+    survivors = state.filter(F.col("bucket").isin(list(dirty)))
+    if doc is not None:
+        survivors = _merge(doc, survivors, ("bucket",))
+    survivors = survivors.filter(~expired)
     surviving = {
         r[0] for r in survivors.select("bucket").distinct().collect()
     }
@@ -1046,34 +1053,25 @@ def compact_expired_tombstones(
 
 
 def read_state(spark, state_dir: str) -> DataFrame:
-    """The maintained table, layout/fencing columns dropped (bucket and
-    _b are implementation details, not part of the keyed-state
-    contract). mergeSchema: mid-evolution the layout is legitimately
-    mixed-schema (touched buckets carry the added column, untouched
-    ones not yet), so the read must merge footers, not trust one file.
+    """The maintained table, one row per key, layout/fencing columns
+    dropped (bucket and _b are implementation details, not part of the
+    keyed-state contract).
 
-    Log-structured monoid layouts (r15): when the ``_monoid.json``
-    sidecar is present the directory holds per-batch PARTIALS, and the
-    read merges them with the declared ops — one aggregation on the
-    read path buys O(delta) writes on every trigger. The merge is
-    keyed on the layout's key alone (not the bucket), so a rebucketed
-    layout reads identically; NULL composes as "no contribution"
-    exactly as in the fold (a column added mid-evolution is NULL for
-    keys with no contribution since it appeared, matching the eager
-    path's envelope).
+    Log-structured layouts (the ``_monoid.json`` sidecar is present)
+    hold per-batch segments, and the read merges them per key with the
+    sidecar's merge: the monoid ops, or latest-wins ``max_by`` over the
+    order columns. Building the read launches no Spark job: the sidecar
+    carries the union schema of every segment. The merge is keyed on
+    the layout's key alone (not the bucket), so a rebucketed layout
+    reads identically; for monoids NULL composes as "no contribution"
+    exactly as in the fold. Layouts without a sidecar (immutable and
+    index stores, one row per key) are read as they are, merging
+    footers.
     """
-    df = (
-        spark.read.option("mergeSchema", "true").parquet(state_dir).drop("bucket")
-    )
-    mpath = os.path.join(state_dir, _MONOID_FILE)
-    if os.path.exists(mpath):
-        with open(mpath, encoding="utf-8") as f:
-            doc = json.load(f)
-        aggs = [
-            _MONOID_OPS[op](c).cast("long").alias(c)
-            for c, op in doc["cols"].items()
-        ]
-        return df.groupBy(doc["key"]).agg(*aggs)
+    doc = _read_sidecar(state_dir)
+    df = _scan(spark, state_dir, doc).drop("bucket")
+    if doc is not None:
+        return _merge(doc, df)
     return df.drop("_b") if "_b" in df.columns else df
 
 
@@ -1086,12 +1084,13 @@ def rebucket_state(
     reshuffle, not a hand-rolled rewrite. Returns the new layout's
     bucket ids.
 
-    One shuffle: read everything (mergeSchema — a mid-evolution layout
-    migrates too), recompute ``bucket = pmod(xxhash64(key), new_B)``,
-    write the new layout to a sibling staging directory, then swap
-    directories. Every non-layout column — including the additive
-    fold's per-row ``_b`` fence stamp and the ``_epoch`` checkpoint
-    stamp — is carried verbatim, so replay fencing survives: a replayed
+    One shuffle: read everything (through the sidecar's union schema,
+    or merging footers — a mid-evolution layout migrates too),
+    recompute ``bucket = pmod(xxhash64(key), new_B)``, write the new
+    layout to a sibling staging directory, then swap directories.
+    Every row — each segment of a log-structured layout, with the
+    monoid fold's per-row ``_b`` fence stamp — and every sidecar
+    (``_epoch``, ``_monoid.json``) is carried verbatim, so replay fencing survives: a replayed
     batch sees ``max(_b)`` per NEW bucket >= the stamp of every old
     bucket that contributed rows, and skips exactly as before.
 
@@ -1111,9 +1110,7 @@ def rebucket_state(
     """
     if not _has_state(state_dir):
         raise ValueError(f"no committed state at {state_dir}")
-    df = (
-        spark.read.option("mergeSchema", "true").parquet(state_dir).drop("bucket")
-    )
+    df = _scan(spark, state_dir, _read_sidecar(state_dir)).drop("bucket")
     out = df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(new_n_buckets)).cast("int")
     )

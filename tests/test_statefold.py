@@ -234,7 +234,7 @@ def test_immutable_fold_respects_bucket_col_layout(spark, tmp_path):
 # ------------------------------------------------- additive fold
 
 
-from hailstorm_spark.streaming.statefold import bucketed_additive_fold  # noqa: E402
+from hailstorm_spark.streaming.statefold import bucketed_monoid_fold  # noqa: E402
 
 ADD_SCHEMA = "user_id long, one long, cents long"
 
@@ -249,8 +249,8 @@ def _add_rows(spark, state_dir):
 def test_additive_fold_sums_and_prunes(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     log: list = []
-    fold = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, touched_log=log,
     )
     fold(
@@ -280,8 +280,8 @@ def test_additive_fold_replay_is_fenced_file_identical(spark, tmp_path):
     the strongest possible idempotence witness)."""
     state_dir = str(tmp_path / "state")
     log: list = []
-    fold = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, touched_log=log,
     )
     fold(spark.createDataFrame([(1, 1, 10), (2, 1, 20)], ADD_SCHEMA), 0)
@@ -406,8 +406,8 @@ def test_additive_epoch_guard_fails_loudly_on_fresh_checkpoint(spark, tmp_path):
     standing additive state must raise, not silently swallow batches
     0..N as replays of the old sequence."""
     state_dir = str(tmp_path / "state")
-    fold_a = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold_a = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, epoch="ckpt-A",
     )
     fold_a(spark.createDataFrame([(1, 1, 10), (2, 1, 20)], ADD_SCHEMA), 0)
@@ -418,8 +418,8 @@ def test_additive_epoch_guard_fails_loudly_on_fresh_checkpoint(spark, tmp_path):
     assert _add_rows(spark, state_dir) == want
     # fresh checkpoint, batch ids restart at 0 — the old behavior was
     # silent data loss (bucket stamped _b=1 >= 0 → "replay" → skip)
-    fold_b = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold_b = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, epoch="ckpt-B",
     )
     with pytest.raises(RuntimeError, match="epoch"):
@@ -430,8 +430,8 @@ def test_additive_epoch_guard_fails_loudly_on_fresh_checkpoint(spark, tmp_path):
     # id — adoption meeting a covering frontier is indistinguishable
     # from swallowing a real batch and must raise (review r10)
     os.remove(os.path.join(state_dir, "_epoch"))
-    fold_c0 = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold_c0 = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, epoch="ckpt-C",
     )
     with pytest.raises(RuntimeError, match="frontier"):
@@ -442,8 +442,8 @@ def test_additive_epoch_guard_fails_loudly_on_fresh_checkpoint(spark, tmp_path):
     assert not os.path.exists(os.path.join(state_dir, "_epoch"))
     with pytest.raises(RuntimeError, match="frontier"):
         fold_c0(spark.createDataFrame([(1, 1, 999)], ADD_SCHEMA), 0)
-    fold_c = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold_c = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, epoch="ckpt-C",
     )
     fold_c(spark.createDataFrame([(2, 1, 1)], ADD_SCHEMA), 2)
@@ -520,8 +520,8 @@ def test_rebucket_preserves_additive_fence_and_epoch(spark, tmp_path):
     replayed pre-migration batch still skips (file-identical) in the
     NEW layout, and the _epoch stamp rides along."""
     state_dir = str(tmp_path / "state")
-    fold8 = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold8 = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=B, epoch="ckpt-A",
     )
     fold8(spark.createDataFrame([(u, 1, 10 * u) for u in range(20)], ADD_SCHEMA), 0)
@@ -535,8 +535,8 @@ def test_rebucket_preserves_additive_fence_and_epoch(spark, tmp_path):
         assert f.read() == "ckpt-A"
 
     log: list = []
-    fold32 = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold32 = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=32, epoch="ckpt-A", touched_log=log,
     )
     snap = _files(state_dir)
@@ -548,8 +548,8 @@ def test_rebucket_preserves_additive_fence_and_epoch(spark, tmp_path):
     fold32(spark.createDataFrame([(3, 1, 3)], ADD_SCHEMA), 2)
     assert _add_rows(spark, state_dir)[3] == (3, 40)
     # the epoch guard survives the migration: a fresh checkpoint still raises
-    fold_fresh = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"),
+    fold_fresh = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
         n_buckets=32, epoch="ckpt-B",
     )
     with pytest.raises(RuntimeError, match="epoch"):
@@ -602,12 +602,13 @@ def test_additive_fold_new_sum_column_is_null_until_observed(spark, tmp_path):
     not 0, for keys with no contribution since it appeared — and sums
     normally once observed."""
     state_dir = str(tmp_path / "state")
-    fold_old = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=B
+    fold_old = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=B
     )
     fold_old(spark.createDataFrame([(1, 1, 10), (2, 1, 20)], ADD_SCHEMA), 0)
-    fold_new = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents", "bonus"), n_buckets=B
+    fold_new = bucketed_monoid_fold(
+        state_dir, key="user_id",
+        cols={"one": "sum", "cents": "sum", "bonus": "sum"}, n_buckets=B,
     )
     fold_new(
         spark.createDataFrame(
@@ -668,17 +669,17 @@ def test_fold_with_stale_n_buckets_fails_loudly(spark, tmp_path):
         fold8(spark.createDataFrame([(7, 99, 200, "y")], SCHEMA), 1)
     assert _rows(spark, state_dir) == before, "guarded fold mutated state"
     add_dir = str(tmp_path / "add")
-    bucketed_additive_fold(
-        add_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=B
+    bucketed_monoid_fold(
+        add_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=B
     )(spark.createDataFrame([(1, 1, 10)], ADD_SCHEMA), 0)
     with pytest.raises(RuntimeError, match="n_buckets"):
-        bucketed_additive_fold(
-            add_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=4
+        bucketed_monoid_fold(
+            add_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=4
         )(spark.createDataFrame([(1, 1, 1)], ADD_SCHEMA), 1)
     # a pre-marker layout is ADOPTED, not rejected (legacy dirs)
     os.remove(os.path.join(add_dir, "_n_buckets"))
-    bucketed_additive_fold(
-        add_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=B
+    bucketed_monoid_fold(
+        add_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=B
     )(spark.createDataFrame([(1, 1, 5)], ADD_SCHEMA), 1)
     assert _add_rows(spark, add_dir)[1] == (2, 15)
     with open(os.path.join(add_dir, "_n_buckets"), encoding="utf-8") as f:
@@ -803,24 +804,6 @@ def test_monoid_fold_rejects_unknown_op_eagerly(spark, tmp_path):
         bucketed_monoid_fold(
             str(tmp_path / "state"), key="user_id", cols={"x": "avg"}
         )
-
-
-def test_additive_fold_is_the_all_sum_monoid_special_case(spark, tmp_path):
-    """The refactor contract: bucketed_additive_fold(sum_cols) and
-    bucketed_monoid_fold(all-sum) must produce identical state over
-    the same batches."""
-    d1, d2 = str(tmp_path / "a"), str(tmp_path / "m")
-    fa = bucketed_additive_fold(d1, key="user_id", sum_cols=("one", "cents"), n_buckets=B)
-    fm = bucketed_monoid_fold(
-        d2, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=B
-    )
-    for bid, rows in enumerate(
-        [[(u, 1, 10 * u) for u in range(20)], [(3, 1, -5), (21, 1, 7)]]
-    ):
-        df = spark.createDataFrame(rows, ADD_SCHEMA)
-        fa(df, bid)
-        fm(df, bid)
-    assert _add_rows(spark, d1) == _add_rows(spark, d2)
 
 
 def test_monoid_fold_new_min_column_is_null_until_observed(spark, tmp_path):

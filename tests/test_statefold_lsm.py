@@ -340,9 +340,10 @@ def test_fold_writers_are_min_buckets_cores_one_file_per_bucket(
 
 
 def test_folds_leave_session_confs_as_found(spark, tmp_path):
-    """A fold call, and two folds overlapped by ``_run_folds``, restore
-    the three session settings the folds pin — including a key that
-    was unset, which must stay unset."""
+    """A fold call, two folds overlapped by ``_run_folds``, a
+    partitioned upsert and a matview refresh leave the three session
+    settings as they found them — including a key that was unset,
+    which must stay unset."""
     from hailstorm_spark.queries.streaming_queries import _run_folds
 
     keys = (
@@ -388,6 +389,18 @@ def test_folds_leave_session_confs_as_found(spark, tmp_path):
             B,
             overlap=True,
         )
+        assert snapshot() == found
+        # the other dynamic-overwrite writers: a partitioned upsert and
+        # a matview refresh
+        from hailstorm_spark.operators.storage import upsert_partitioned
+        from hailstorm_spark.queries.matview import events_matview_incremental_daily
+        from tests.conftest import SF_DIR
+
+        upsert_partitioned(
+            mbatch.withColumn("day", F.lit(1)), str(tmp_path / "up"), "day"
+        )
+        assert snapshot() == found
+        events_matview_incremental_daily(spark, SF_DIR)
         assert snapshot() == found
     finally:
         for k, v in original.items():

@@ -151,14 +151,14 @@ def test_additive_fold_random_replay_storm_never_double_adds(
     batch_id fence must make every redelivery a no-op: the final state
     equals the sum over the unique batches, computed in pure Python."""
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
     rng = random.Random(seed)
     state_dir = str(tmp_path / "state")
-    fold = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=8
+    fold = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=8
     )
     schema = "user_id long, one long, cents long"
     batches = []
@@ -236,7 +236,7 @@ def test_additive_replay_storm_with_rebucket_keeps_fence(spark, tmp_path, seed):
     reshuffle, and max(_b) per NEW bucket is >= every contributing old
     bucket's stamp). Final sums equal the unique-batch Python truth."""
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
         rebucket_state,
     )
@@ -249,8 +249,8 @@ def test_additive_replay_storm_with_rebucket_keeps_fence(spark, tmp_path, seed):
     truth: dict[int, list[int]] = {}
     migrations = 0
     for bid in range(8):
-        fold = bucketed_additive_fold(
-            state_dir, key="user_id", sum_cols=("one", "cents"),
+        fold = bucketed_monoid_fold(
+            state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
             n_buckets=n_buckets, epoch="ckpt",
         )
         rows = [
@@ -273,8 +273,8 @@ def test_additive_replay_storm_with_rebucket_keeps_fence(spark, tmp_path, seed):
         # at-least-once storm, possibly replaying across the migration
         while rng.random() < 0.6:
             rb = rng.randrange(bid + 1)
-            bucketed_additive_fold(
-                state_dir, key="user_id", sum_cols=("one", "cents"),
+            bucketed_monoid_fold(
+                state_dir, key="user_id", cols={"one": "sum", "cents": "sum"},
                 n_buckets=n_buckets, epoch="ckpt",
             )(spark.createDataFrame(batches[rb], schema), rb)
     assert migrations > 0, "fixture never migrated — replay is vacuous"

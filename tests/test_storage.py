@@ -142,6 +142,8 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
         }
 
     day1_before = files_of("2024-01-01")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key, None)
 
     upsert = spark.createDataFrame(
         [("2024-01-02", 3, "c2"), ("2024-01-02", 4, "d")], ["day", "id", "v"]
@@ -163,10 +165,10 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
         ("2024-01-02", 3, "c2"),
         ("2024-01-02", 4, "d"),
     }
-    # overwrite mode restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-    )
+    # the session's overwrite mode is left as found: static (the mode
+    # is passed per write; its values are case-insensitive)
+    assert spark.conf.get(mode_key, None) == mode_before
+    assert spark.conf.get(mode_key).upper() == "STATIC"
 
 
 def test_incremental_band_index_probe_is_one_sided(spark):

@@ -663,7 +663,7 @@ def test_bucketed_fold_exactly_once_across_restart(spark, tmp_path):
     import pandas as pd
 
     from hailstorm_spark.streaming.statefold import (
-        bucketed_additive_fold,
+        bucketed_monoid_fold,
         read_state,
     )
 
@@ -677,8 +677,8 @@ def test_bucketed_fold_exactly_once_across_restart(spark, tmp_path):
     # epoch = the checkpoint identity: the SAME checkpoint resumes
     # cleanly across the restart below (the guard only rejects a
     # DIFFERENT epoch meeting standing state)
-    fold = bucketed_additive_fold(
-        state_dir, key="user_id", sum_cols=("one", "cents"), n_buckets=4,
+    fold = bucketed_monoid_fold(
+        state_dir, key="user_id", cols={"one": "sum", "cents": "sum"}, n_buckets=4,
         epoch=ckpt,
     )
 
