@@ -16,13 +16,42 @@ local[32] tests:
 - Arrow on: every pandas_udf / mapInPandas boundary is Arrow-batched.
 - Session timezone UTC: deterministic date/timestamp semantics that
   match the DuckDB oracle used by the test harness.
+
+Local file writes without forked processes. Without the native Hadoop
+library, Hadoop's ``RawLocalFileSystem`` forks ``chmod`` for every
+file and directory it creates and ``readlink`` twice for every
+``FileContext.rename``: about 4 ms each, and every streaming checkpoint
+file, state changelog and keyed-state segment pays them. For
+``local[...]`` masters ``build_spark`` serves ``file://`` with the
+shim in ``jvm/`` (``hailstorm.fs.LocalFileSystem`` for ``FileSystem``,
+``hailstorm.fs.LocalFs`` for ``FileContext``). It is Hadoop's
+checksummed local filesystem with two calls made in-process:
+``setPermission`` sets the nine rwx bits through java.nio (other bits
+go to Hadoop), and ``getFileLinkStatus`` returns ``getFileStatus`` for
+a path that is not a symlink, as the stock call does after its
+``readlink``. Checksums, modes and errors are unchanged. The shim is
+installed only in a JVM whose class path has its jar: one that
+``build_spark`` launches (the jar is appended to
+``spark.driver.extraClassPath``), or a running one where the class
+already loads, for example after ``spark.stop()``. A live session, a
+JVM started by someone else and non-local masters keep the stock
+filesystem. ``jvm/build.sh`` rebuilds the jar from its source.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+_LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm",
+                            "hailstorm-localfs.jar")
+_LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "hailstorm.fs.LocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "hailstorm.fs.LocalFs",
+}
 
 
 def _default_parallelism() -> int:
@@ -32,46 +61,64 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _install_local_fs(conf: dict[str, str]) -> None:
+    """Add the in-process ``file://`` filesystem to ``conf`` if its class
+    loads in the JVM; launch the JVM first, with the jar on its class
+    path, if none runs yet."""
+    if SparkContext._gateway is None:
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = cp + os.pathsep + _LOCALFS_JAR if cp else _LOCALFS_JAR
+        # the same confs getOrCreate would launch it with
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(list(conf.items())))
+    try:
+        SparkContext._jvm.java.lang.Class.forName(_LOCALFS_CONF["spark.hadoop.fs.file.impl"])
+    except Py4JJavaError:  # a JVM without the jar: keep the stock filesystem
+        return
+    for k, v in _LOCALFS_CONF.items():
+        conf.setdefault(k, v)
+
+
 def build_spark(
     app_name: str = "hailstorm-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults.
-
-    Any config already set on an existing session is left alone —
-    getOrCreate semantics — so tests and the driver can share one JVM.
+    """Build a SparkSession with the engine's defaults, or return the
+    live one untouched: a session configured elsewhere keeps its confs.
     """
+    live = SparkSession._instantiatedSession  # what getOrCreate would return
+    if live is not None and live._sc._jsc is not None:
+        return live
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{_default_parallelism()}]"
     shuffle = shuffle_partitions or _default_parallelism()
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # The synthetic events table stores TIMESTAMP(NANOS) parquet,
         # which Spark's vectorized reader rejects; read as long nanos
         # and convert explicitly in io.load_table (truncation to µs,
         # matching DuckDB's nanosecond handling).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Streaming state at 100 TB belongs in RocksDB, not the JVM heap.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
         # Local runs: keep the UI off and the driver quiet.
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        **(extra_conf or {}),
+    }
+    # local-cluster executors are JVMs of their own, without the jar
+    if conf["spark.master"] == "local" or conf["spark.master"].startswith("local["):
+        _install_local_fs(conf)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
