@@ -35,6 +35,7 @@ from hailstorm_spark.functions.expr import let_
 from hailstorm_spark.operators.checkpointing import materialize
 from hailstorm_spark.functions.hashing import md5_hash60
 from hailstorm_spark.functions.text import tokens
+from hailstorm_spark.session import pinned_confs
 
 SHINGLE_N = 3
 MINHASH_K = 16
@@ -540,26 +541,16 @@ def _loop_width_for(n_rows: int, cores: int) -> int:
     return max(4, min(cores, n_rows // _LOOP_ROWS_PER_TASK + 1))
 
 
-class _loop_shuffle_width:
-    """Context manager pinning spark.sql.shuffle.partitions to the core
-    count for the duration of an iterative loop over a SMALL frame (a
-    candidate edge list ≪ corpus): a 200-partition default turns every
-    per-iteration join/agg into 200 near-empty tasks, multiplying pure
-    scheduling overhead by the iteration count (measured 2× end-to-end
-    on a default-config session). Restored on exit — corpus-sized
+def _loop_shuffle_width(spark):
+    """Pin spark.sql.shuffle.partitions to the core count for the
+    duration of an iterative loop over a SMALL frame (a candidate edge
+    list ≪ corpus): a 200-partition default turns every per-iteration
+    join/agg into 200 near-empty tasks, multiplying pure scheduling
+    overhead by the iteration count (measured 2× end-to-end on a
+    default-config session). Put back as found on exit — corpus-sized
     shuffles elsewhere keep the session's setting."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        width = self.spark.sparkContext.defaultParallelism
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(max(4, width)))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+    width = max(4, spark.sparkContext.defaultParallelism)
+    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
 
 def _connected_components_impl(

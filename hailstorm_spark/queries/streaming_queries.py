@@ -22,6 +22,7 @@ from hailstorm_spark.functions.localframe import local_df
 from hailstorm_spark.functions.text import tokens, tokens_sql
 from hailstorm_spark.io import load_table, normalize_events_ts, table_path, table_schema
 from hailstorm_spark.registry import register
+from hailstorm_spark.session import pinned_confs
 from hailstorm_spark.streaming.bolt import streaming_word_counts
 
 _WORDS_SQL = f"(SELECT unnest({tokens_sql('text')}) AS word FROM documents)"
@@ -38,8 +39,10 @@ def _stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-#: Conf key overriding the pinned state width for stateful drains.
-STATE_WIDTH_CONF = "hailstorm.streaming.stateWidth"
+#: State width of a stateful drain: its state-store partitions (see
+#: ``_state_width``) and its batch-derivation parallelism
+#: (``_spread_batch``).
+STATE_WIDTH = 8
 
 
 #: Sentinel a NULL kind-key component rides through concat_ws, which
@@ -77,34 +80,44 @@ def _delim_guard(col, delim: str, ctx: str):
     ).otherwise(c)
 
 
-class _state_width:
+def _state_width(spark: SparkSession):
     """Pin spark.sql.shuffle.partitions — which fixes the STATE STORE
-    partition count at first start from a fresh checkpoint — for the
-    duration of a stateful streaming drain, restoring it on exit.
+    partition count at first start from a fresh checkpoint — to
+    min(session width, ``STATE_WIDTH``) for the duration of a stateful
+    streaming drain, then put it back as it was.
 
     State partitions should track state VOLUME, not core count: every
     partition opens its own state-store instance per stateful operator
     per micro-batch, and a stream-stream join keeps four state stores,
     so a 32-core default turns a bounded drain into 128 store
     open/commit cycles per batch (measured 5.5→2.8 s at sf0.1). The
-    default pin of 8 suits bounded fixtures and modest streams; size it
-    up via the ``hailstorm.streaming.stateWidth`` conf for real volume
-    — repartitioning state needs a fresh checkpoint either way.
+    pin of 8 suits bounded fixtures and modest streams; repartitioning
+    state needs a fresh checkpoint either way.
     """
+    width = min(int(spark.conf.get("spark.sql.shuffle.partitions")), STATE_WIDTH)
+    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
 
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        width = int(self.spark.conf.get(STATE_WIDTH_CONF, "8"))
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(self.prev), width))
+def _drain_staged(
+    spark: SparkSession, schema, stage: str, fold, ckpt: str, name: str
+) -> None:
+    """Drain the waves staged in ``stage`` through ``fold``
+    (foreachBatch), one file per trigger with availableNow, under
+    ``_state_width``. A drain that does not finish in 300 s raises
+    instead of leaving the caller to read half-folded state."""
+    with _state_width(spark):
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.foreachBatch(fold)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{name}: drain did not finish in 300s")
 
 
 def _drain_to_memory(df: DataFrame, spark: SparkSession, output_mode: str) -> DataFrame:
@@ -915,25 +928,16 @@ def _register_streaming_incremental() -> None:
         ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
         # the per-batch probe joins move band keys of ONE day's slice —
         # tiny frames that want few shuffle partitions, not core-count
-        # (measured 6.0 -> 5.0 s at sf0.1); _state_width pins width for
-        # the drain and restores after
-        with _state_width(spark):
-            q = (
-                spark.readStream.schema(docs.select("doc_id", "text").schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(probe_and_grow)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_incremental_dedup_index: drain did not "
-                    "finish within 300s — refusing to return a partial "
-                    "survivor set / half-grown index"
-                )
+        # (measured 6.0 -> 5.0 s at sf0.1); the drain runs under
+        # _state_width
+        _drain_staged(
+            spark,
+            docs.select("doc_id", "text").schema,
+            stage,
+            probe_and_grow,
+            ckpt,
+            "streaming_incremental_dedup_index",
+        )
         return spark.read.parquet(out_dir).select("doc_id")
 
 
@@ -944,31 +948,15 @@ def _keyed_pair_probe(batch: DataFrame, state_dir: str, keycol: str) -> DataFram
     """Generic blocked-index probe (the ER probe's shape without a
     verification rule): candidates = batch × (the batch's touched
     standing key-buckets ∪ the batch itself) on ``keycol`` equality,
-    normalized doc_a < doc_b. The standing read is a static partition
-    filter over the ``bucket_col=keycol`` layout; the pruning modulus
-    comes from the layout's own ``_n_buckets`` stamp (ADVICE r13), so
-    a rebucketed store can never be probed with a stale count."""
-    from hailstorm_spark.streaming.statefold import _has_state, state_bucket_count
+    normalized doc_a < doc_b. The standing read is ``probe_state`` over
+    the ``bucket_col=keycol`` layout: a static partition filter whose
+    modulus is the layout's own ``_n_buckets`` stamp (ADVICE r13)."""
+    from hailstorm_spark.streaming.statefold import probe_state
 
-    s = batch.sparkSession
     sides = [batch.select("doc_id", keycol)]
-    if _has_state(state_dir):
-        n_b = state_bucket_count(state_dir, _ER_STATE_BUCKETS)
-        touched = [
-            r["b"]
-            for r in batch.select(
-                F.pmod(F.xxhash64(keycol), F.lit(n_b))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        sides.append(
-            s.read.parquet(state_dir)
-            .filter(F.col("bucket").isin(touched))
-            .select("doc_id", keycol)
-        )
+    standing = probe_state(batch.sparkSession, state_dir, batch, on=keycol)
+    if standing is not None:
+        sides.append(standing.select("doc_id", keycol))
     cand = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
     a, c = sides[0].alias("a"), cand.alias("c")
     return (
@@ -1155,21 +1143,9 @@ def _register_streaming_dedup_labels() -> None:
                 overlap=True,
             )
 
-        with _state_width(spark):
-            q = (
-                spark.readStream.schema(rows.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_dedup_incremental_labels drain timed out"
-                )
+        _drain_staged(
+            spark, rows.schema, stage, fold, ckpt, "streaming_dedup_incremental_labels"
+        )
 
         labels = read_state(spark, labels_dir)
         return labels.select(
@@ -1201,32 +1177,18 @@ def _semantic_verify_pairs(
     SAME verification cosine_pairs_above_lsh applies in batch."""
     from hailstorm_spark.operators.similarity import quantized_cosine
     from hailstorm_spark.queries.similarity import NEAR_DUP_THRESHOLD
-    from hailstorm_spark.streaming.statefold import (
-        _has_state,
-        state_bucket_count,
-    )
+    from hailstorm_spark.streaming.statefold import probe_state
 
-    s = qb.sparkSession
     ids = (
         cand.select(F.col("doc_a").alias("vid"))
         .unionByName(cand.select(F.col("doc_b").alias("vid")))
         .distinct()
     )
     sides = [qb.select("vid", "qvec", "qnorm")]
-    if _has_state(vec_dir):
-        n_b = state_bucket_count(vec_dir, _ER_STATE_BUCKETS)
-        touched = [
-            r["b"]
-            for r in ids.select(
-                F.pmod(F.xxhash64("vid"), F.lit(n_b)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
+    standing = probe_state(qb.sparkSession, vec_dir, ids, on="vid")
+    if standing is not None:
         sides.append(
-            s.read.parquet(vec_dir)
-            .filter(F.col("bucket").isin(touched))
-            .join(F.broadcast(ids), "vid")
+            standing.join(F.broadcast(ids), "vid")
             # a replayed batch's rows are standing too — batch rows
             # take precedence (vectors are immutable, so either copy
             # is byte-identical; the anti-join just guarantees one row
@@ -1442,21 +1404,9 @@ def _register_streaming_semantic_dedup() -> None:
         def fold(batch_df: DataFrame, batch_id: int) -> None:
             fold_inner(batch_df.drop("wv"), batch_id)
 
-        with _state_width(spark):
-            q = (
-                spark.readStream.schema(rows.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_semantic_dedup_labels drain timed out"
-                )
+        _drain_staged(
+            spark, rows.schema, stage, fold, ckpt, "streaming_semantic_dedup_labels"
+        )
 
         labels = read_state(spark, labels_dir).select(
             F.col("doc_id").alias("vec_id"), "cluster_id"
@@ -1578,16 +1528,14 @@ def _spread_batch(batch: DataFrame) -> DataFrame:
     that one task at sf0.1 — and a single-partition localCheckpoint
     then serializes every downstream map stage too. One round-robin
     shuffle of the raw batch (KBs–MBs per trigger) buys back the
-    parallelism. Width = the ``_state_width`` dial, NOT core count:
-    the same conf that sizes the drain's stateful-operator partitions
-    sizes its batch-derivation parallelism, so a production stream
-    raises both with one knob while a bounded fixture is not shattered
-    into per-core crumbs. At production scale sources deliver
+    parallelism. Width = ``STATE_WIDTH``, NOT core count: the same
+    width that sizes the drain's stateful-operator partitions sizes
+    its batch-derivation parallelism, so a bounded fixture is not
+    shattered into per-core crumbs. At production scale sources deliver
     multi-split batches and this still bounds the worst case (one hot
     file). Keyless repartition sorts before exchanging (Spark
     default), so retry placement stays deterministic."""
-    s = batch.sparkSession
-    return batch.repartition(int(s.conf.get(STATE_WIDTH_CONF, "8")))
+    return batch.repartition(STATE_WIDTH)
 
 
 def _run_folds(spark, tasks, n_buckets: int, overlap: bool) -> None:
@@ -1861,22 +1809,9 @@ def _register_streaming_upsert() -> None:
         )
 
         ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-        with _state_width(spark):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_upsert_latest_per_user: drain did not "
-                    "finish within 300s — refusing to return stale state"
-                )
+        _drain_staged(
+            spark, ev.schema, stage, upsert, ckpt, "streaming_upsert_latest_per_user"
+        )
         return read_state(spark, state_dir).select(
             "user_id",
             "event_id",
@@ -1984,80 +1919,68 @@ def streaming_bitmap_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFra
     """Exact distinct-users-per-day maintained BY the stream: each
     micro-batch folds its rows into persisted (day, word) bitmap
     partials — the streaming twin of sketch_bitmap_cumulative_users,
-    and the exact-count sibling of a streaming HLL rollup. Because
-    bit-OR is idempotent AND commutative, the merge is replay-safe by
-    algebra alone: the versioned-state discipline from
-    streaming_upsert_latest_per_user (state_v{N} = merge(state_v{N-1},
-    batch_N), overwrite) turns foreachBatch's at-least-once into
-    exactly-once state, and here even a DOUBLE-folded batch could not
-    corrupt the answer — OR-ing the same bits twice is a no-op. That
-    idempotence is precisely why bitmap/HLL partials are the canonical
-    streaming-distinct state at 100 TB: no tombstones, no dedup ledger,
-    just a monoid.
+    and the exact-count sibling of a streaming HLL rollup. The state is
+    a ``bit_or`` monoid fold keyed by the struct ``k = (day, word)``
+    (``_bitmap_fold_builder``), fenced per bucket with ``_b`` and
+    stamped with the checkpoint as its epoch like every monoid fold —
+    though bit-OR is idempotent AND commutative, so even a DOUBLE-folded
+    batch could not corrupt the answer: OR-ing the same bits twice is a
+    no-op. That idempotence is precisely why bitmap/HLL partials are
+    the canonical streaming-distinct state at 100 TB: no tombstones, no
+    dedup ledger, just a monoid.
 
-    Per batch the traffic is that batch's (day, word) partials + the
-    current state table (≤ days × max_user/32 words — metadata-sized);
-    raw history is never re-read. After the drain, per-day popcounts
-    must equal the batch COUNT(DISTINCT) — the oracle.
+    Per batch the traffic is that batch's (day, word) partials, appended
+    as one segment per touched bucket; raw history is never re-read.
+    After the drain, per-day popcounts must equal the batch
+    COUNT(DISTINCT) — the oracle.
     """
-    import os
-    import shutil
-    import time
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     stage = tempfile.mkdtemp(prefix="hs_bmstream_days_")
     work = tempfile.mkdtemp(prefix="hs_bmstream_work_")
-
     _stage_parity_waves(ev, stage, work)
+    state_dir = os.path.join(work, "state")
+    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
+    fold = _bitmap_fold_builder(state_dir, ckpt)
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_bitmap_distinct_daily")
+    return _bitmap_readout(spark, state_dir)
 
-    def state_path(version: int) -> str:
-        return os.path.join(work, f"state_v{version}")
+
+def _bitmap_fold_builder(state_dir: str, epoch: str):
+    """streaming_bitmap_distinct_daily's per-batch fold: an event sets
+    bit ``user_id % 32`` of word ``user_id div 32`` on its day, OR-ed
+    into monoid state keyed by the struct ``k = (day, word)``."""
+    from hailstorm_spark.streaming.statefold import bucketed_monoid_fold
+
+    base = bucketed_monoid_fold(
+        state_dir, key="k", cols={"bits": "bit_or"}, epoch=epoch
+    )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        partial = (
+        base(
             batch_df.select(
-                F.to_date("ts").alias("day"),
-                F.expr("user_id div 32").alias("word"),
+                F.struct(
+                    F.to_date("ts").alias("day"),
+                    F.expr("user_id div 32").alias("word"),
+                ).alias("k"),
                 F.call_function(
                     "shiftleft",
                     F.lit(1).cast("long"),
                     F.expr("cast(user_id % 32 as int)"),
                 ).alias("bits"),
-            )
-        )
-        prev = state_path(batch_id - 1)
-        if batch_id > 0 and os.path.isdir(prev):
-            partial = s.read.parquet(prev).unionByName(partial)
-        (
-            partial.groupBy("day", "word")
-            .agg(F.bit_or("bits").alias("bits"))
-            .write.mode("overwrite")
-            .parquet(state_path(batch_id))
+            ),
+            batch_id,
         )
 
-    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_bitmap_distinct_daily drain timed out")
-    last = max(
-        int(p.rsplit("_v", 1)[1])
-        for p in os.listdir(work)
-        if p.startswith("state_v")
-    )
-    state = spark.read.parquet(state_path(last))
-    return state.groupBy("day").agg(
-        F.sum(F.bit_count("bits")).cast("long").alias("n_users_day")
+    return fold
+
+
+def _bitmap_readout(spark: SparkSession, state_dir: str) -> DataFrame:
+    from hailstorm_spark.streaming.statefold import read_state
+
+    return (
+        read_state(spark, state_dir)
+        .groupBy(F.col("k.day").alias("day"))
+        .agg(F.sum(F.bit_count("bits")).cast("long").alias("n_users_day"))
     )
 
 
@@ -2184,15 +2107,14 @@ def streaming_markov_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Markov transition matrix maintained BY the stream — the
     order-dependent state shape the other incremental queries dodge
     (bit-OR is order-free, newest-per-key only needs the max): a
-    transition can STRADDLE a batch boundary, so per-batch state is
-    (transition counts so far, last event per user). Each batch unions
-    the carried last-events with its rows, one per-user ordered window
-    extracts intra-batch AND boundary transitions in the same pass (the
-    carried row sits at rn=1 with no predecessor, so its own transition
-    — counted in an earlier batch — can never double-count), then both
-    state tables advance via the versioned batch_id discipline
-    (state_vN = f(state_v(N−1), batch), overwrite ⇒ replayed batches
-    are idempotent).
+    transition can STRADDLE a batch boundary, so the state is two
+    stores — transition counts so far (a ``sum`` monoid fold keyed by
+    the struct ``t = (from_type, to_type)``) and the last event per
+    user (``bucketed_latest_fold`` on (ts, event_id)). Each batch
+    unions the carried last-events of its users with its rows, and one
+    per-user ordered window extracts intra-batch AND boundary
+    transitions in the same pass (see ``_markov_fold_builder`` for the
+    replay argument).
 
     The fixture stages TIME-ordered waves (median-day split) because
     transition adjacency requires batches in event-time order — the
@@ -2201,91 +2123,94 @@ def streaming_markov_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the BATCH Markov query's oracle verbatim — the
     incremental computation is held to the one-shot result.
 
-    Per batch: that batch + one carried row per active user + the
-    counts table (|types|² rows) — history is never re-read.
+    Per batch: that batch + one carried row per user it touches + the
+    batch's transition partials — history is never re-read.
     """
-    import os
-
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
     stage = tempfile.mkdtemp(prefix="hs_markov_days_")
     work = tempfile.mkdtemp(prefix="hs_markov_work_")
     _stage_time_waves(ev, stage, work)
+    trans_dir = os.path.join(work, "trans")
+    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
+    fold = _markov_fold_builder(trans_dir, os.path.join(work, "last"), ckpt)
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_markov_maintenance")
+    return _markov_readout(spark, trans_dir)
 
-    def tpath(v: int) -> str:
-        return os.path.join(work, f"trans_v{v}")
 
-    def lpath(v: int) -> str:
-        return os.path.join(work, f"last_v{v}")
+def _markov_fold_builder(trans_dir: str, last_dir: str, epoch: str, chaos=None):
+    """streaming_markov_maintenance's per-batch fold. The carried row of
+    a user is the newest standing last-event row that ranks BEFORE the
+    user's first event in the batch; it sits first in the user's
+    window with no predecessor, so its own transition — counted in an
+    earlier batch — is never counted again.
+
+    Replay: the transition fold runs FIRST and is fenced per bucket by
+    ``_b``; the last-event fold is latest-wins, so re-applying it is a
+    no-op. A crash between the two folds replays with the old
+    last-events and recomputes exactly the committed transitions, which
+    the fence skips. A replay after both folds committed finds the
+    batch's own events standing: the filter drops every row at or after
+    the user's first event, so the replay yields at most the first
+    attempt's transitions, again skipped by the fence. Without the
+    filter it would count spurious last→last transitions.
+    ``chaos(point, batch_id)`` is a crash-injection hook for tests,
+    called between the folds."""
+    from pyspark.sql import Window
+
+    from hailstorm_spark.streaming.statefold import (
+        bucketed_latest_fold,
+        bucketed_monoid_fold,
+        probe_state,
+    )
+
+    trans_fold = bucketed_monoid_fold(
+        trans_dir, key="t", cols={"n_transitions": "sum"}, epoch=epoch
+    )
+    last_fold = bucketed_latest_fold(
+        last_dir, key="user_id", order_cols=("ts", "event_id")
+    )
+    cols = ["user_id", "event_type", "ts", "event_id"]
+    order = F.struct("ts", "event_id")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        rows = batch_df.select("user_id", "event_type", "ts", "event_id")
-        prev_l = lpath(batch_id - 1)
-        if batch_id > 0 and os.path.isdir(prev_l):
-            rows = s.read.parquet(prev_l).unionByName(rows)
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        marked = rows.select(
-            "user_id",
-            "event_type",
-            "ts",
-            "event_id",
-            F.lag("event_type").over(w).alias("prev"),
-            F.row_number()
-            .over(
-                Window.partitionBy("user_id").orderBy(
-                    F.col("ts").desc(), F.col("event_id").desc()
-                )
+        batch = batch_df.select(*cols).localCheckpoint(eager=True)
+        rows = batch
+        standing = probe_state(batch.sparkSession, last_dir, batch, on="user_id")
+        if standing is not None:
+            first = batch.groupBy("user_id").agg(F.min(order).alias("_first"))
+            carried = (
+                standing.join(first, "user_id")
+                .filter(order < F.col("_first"))
+                .groupBy("user_id")
+                .agg(F.max_by(F.struct(*cols), order).alias("_c"))
+                .select("_c.*")
             )
-            .alias("rn_desc"),
-        ).localCheckpoint(eager=True)
+            rows = carried.unionByName(batch)
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         trans = (
-            marked.filter(F.col("prev").isNotNull())
-            .groupBy(
-                F.col("prev").alias("from_type"),
+            rows.select(
+                F.lag("event_type").over(w).alias("from_type"),
                 F.col("event_type").alias("to_type"),
             )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
+            .filter(F.col("from_type").isNotNull())
+            .groupBy(F.struct("from_type", "to_type").alias("t"))
+            .agg(F.count(F.lit(1)).alias("n_transitions"))
+            .localCheckpoint(eager=True)  # |types|² rows, read twice by a fenced fold
         )
-        prev_t = tpath(batch_id - 1)
-        if batch_id > 0 and os.path.isdir(prev_t):
-            trans = s.read.parquet(prev_t).unionByName(trans)
-        (
-            trans.groupBy("from_type", "to_type")
-            .agg(F.sum("n_transitions").cast("long").alias("n_transitions"))
-            .write.mode("overwrite")
-            .parquet(tpath(batch_id))
-        )
-        (
-            marked.filter(F.col("rn_desc") == 1)
-            .select("user_id", "event_type", "ts", "event_id")
-            .write.mode("overwrite")
-            .parquet(lpath(batch_id))
-        )
+        trans_fold(trans, batch_id)
+        if chaos is not None:
+            chaos("between_folds", batch_id)
+        last_fold(batch, batch_id)
 
-    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_markov_maintenance drain timed out")
-    last = max(
-        int(p.rsplit("_v", 1)[1])
-        for p in os.listdir(work)
-        if p.startswith("trans_v")
-    )
-    c = spark.read.parquet(tpath(last))
+    return fold
+
+
+def _markov_readout(spark: SparkSession, trans_dir: str) -> DataFrame:
+    from hailstorm_spark.streaming.statefold import read_state
+
+    c = read_state(spark, trans_dir).select("t.*", "n_transitions")
     r = c.groupBy("from_type").agg(
         F.sum("n_transitions").cast("long").alias("row_total")
     )
@@ -2325,78 +2250,63 @@ def streaming_markov_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_pchart_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The p-chart maintained BY the stream: each micro-batch folds its
-    (day, n, n_bad) counts into versioned state — counts are an
-    additive monoid (NOT idempotent, unlike the bitmap query's bit-OR),
-    so exactly-once rests entirely on the versioned batch_id discipline
-    (state_vN = merge(state_v(N−1), batch), overwrite ⇒ a replayed
-    batch can never double-fold). The 3σ decision re-evaluates over the
-    maintained daily table after the drain, against corpus totals
-    derived FROM the state — so the monitor's verdicts must equal the
-    batch p-chart's oracle verbatim (minus the deviation witness, which
-    is the batch query's own surface).
+    (day, n, n_bad) counts into a ``sum`` monoid fold keyed by day —
+    counts are an additive monoid (NOT idempotent, unlike the bitmap
+    query's bit-OR), so exactly-once rests entirely on the fold's
+    per-bucket ``_b`` fence and its checkpoint epoch: a replayed batch
+    skips the buckets it already stamped and can never double-fold.
+    The 3σ decision re-evaluates over the maintained daily table after
+    the drain, against corpus totals derived FROM the state — so the
+    monitor's verdicts must equal the batch p-chart's oracle verbatim
+    (minus the deviation witness, which is the batch query's own
+    surface).
 
     This completes the incremental-state triple: idempotent-by-algebra
     (bitmap OR), order-dependent (Markov last-event carry), and
     order-FREE-but-non-idempotent (these additive counts). Per batch:
-    the batch's daily partials + the |days| state table; raw history is
-    never re-read, and the chart is always current — the shape a DQ
-    monitor actually runs in production.
+    the batch's daily partials, appended per touched bucket; raw
+    history is never re-read, and the chart is always current — the
+    shape a DQ monitor actually runs in production.
     """
-    import os
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     stage = tempfile.mkdtemp(prefix="hs_pchart_days_")
     work = tempfile.mkdtemp(prefix="hs_pchart_work_")
     _stage_parity_waves(ev, stage, work)
+    state_dir = os.path.join(work, "state")
+    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
+    fold = _pchart_fold_builder(state_dir, ckpt)
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_pchart_monitor")
+    return _pchart_readout(spark, state_dir)
 
-    def spath(v: int) -> str:
-        return os.path.join(work, f"state_v{v}")
+
+def _pchart_fold_builder(state_dir: str, epoch: str):
+    """streaming_pchart_monitor's per-batch fold: per day, the event
+    count ``n`` and the out-of-range count ``nb`` (value outside
+    [0, 400]), summed into monoid state keyed by ``day``."""
+    from hailstorm_spark.streaming.statefold import bucketed_monoid_fold
+
+    base = bucketed_monoid_fold(
+        state_dir, key="day", cols={"n": "sum", "nb": "sum"}, epoch=epoch
+    )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        partial = batch_df.select(
-            F.to_date("ts").alias("day"),
-            F.lit(1).cast("long").alias("n"),
-            F.when(
-                (F.col("value") >= 0.0) & (F.col("value") <= 400.0), 0
-            )
-            .otherwise(1)
-            .cast("long")
-            .alias("nb"),
-        )
-        prev = spath(batch_id - 1)
-        if batch_id > 0 and os.path.isdir(prev):
-            partial = s.read.parquet(prev).unionByName(partial)
-        (
-            partial.groupBy("day")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("nb").cast("long").alias("nb"),
-            )
-            .write.mode("overwrite")
-            .parquet(spath(batch_id))
+        in_range = (F.col("value") >= 0.0) & (F.col("value") <= 400.0)
+        base(
+            batch_df.select(
+                F.to_date("ts").alias("day"),
+                F.lit(1).cast("long").alias("n"),
+                F.when(in_range, 0).otherwise(1).cast("long").alias("nb"),
+            ),
+            batch_id,
         )
 
-    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_pchart_monitor drain timed out")
-    last = max(
-        int(p.rsplit("_v", 1)[1])
-        for p in os.listdir(work)
-        if p.startswith("state_v")
-    )
-    d = spark.read.parquet(spath(last))
+    return fold
+
+
+def _pchart_readout(spark: SparkSession, state_dir: str) -> DataFrame:
+    from hailstorm_spark.streaming.statefold import read_state
+
+    d = read_state(spark, state_dir)
     t = d.agg(
         F.sum("n").cast("long").alias("nn"), F.sum("nb").cast("long").alias("bb")
     )
@@ -2563,19 +2473,14 @@ def streaming_watermark_late_accounting(spark: SparkSession, sf_dir: str) -> Dat
         state["max_us"] = mx if state["max_us"] is None else max(state["max_us"], mx)
 
     ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema("event_id bigint, ts_us bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_watermark_late_accounting drain timed out")
+    _drain_staged(
+        spark,
+        "event_id bigint, ts_us bigint",
+        stage,
+        fold,
+        ckpt,
+        "streaming_watermark_late_accounting",
+    )
     return local_df(
         spark,
         acc,
@@ -2810,13 +2715,14 @@ def streaming_running_spend_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/statefold.py. Latest-wins is replay-idempotent for free;
     a running SUM is not (a redelivered batch double-adds), so the
     fold fences with a per-bucket batch_id stamp stored IN the state:
-    replayed batches skip already-stamped buckets without even
-    rewriting them (file-identical, pinned by
-    tests/test_statefold.py). Per batch the input is partially
-    aggregated per (key, bucket) map-side BEFORE touching state, the
-    standing read prunes to touched buckets, and only those buckets
-    rewrite — O(|batch| + touched buckets) per trigger, never
-    O(|state|). Deletes/corrections ride the same fold as signed
+    replayed batches skip already-stamped buckets without writing
+    anything (file-identical, pinned by tests/test_statefold.py). Per
+    batch the input is partially aggregated per (key, bucket) map-side,
+    and the partials are APPENDED as one segment per touched bucket;
+    standing rows are neither read nor rewritten (``read_state`` merges
+    the segments) — O(|batch|) per trigger, never O(|state|), with a
+    touched bucket compacted every ``_COMPACT_SEGMENTS`` segments.
+    Deletes/corrections ride the same fold as signed
     values (see the retraction test); this query folds the raw event
     feed, so the oracle is the one-shot batch GROUP BY.
     """
@@ -2847,19 +2753,7 @@ def streaming_running_spend_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         base(batch_df.select("user_id", "one", "cents"), batch_id)
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_running_spend_fold drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_running_spend_fold")
     return read_state(spark, state_dir).select(
         "user_id",
         F.col("one").alias("n_events"),
@@ -2983,12 +2877,12 @@ def statefold_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed fold — the second real ops event (after re-bucketing)
     such a table meets: the upstream adds a column mid-stream. The
     envelope is ADD-only and batch-authoritative
-    (streaming/statefold.py): standing files are read THROUGH the
-    batch's schema, so the new column NULL-fills from pre-evolution
-    buckets, touched buckets rewrite with the evolved schema, and
-    untouched buckets keep their pre-evolution bytes until next
-    touched (byte-identity pinned in tests/test_statefold.py;
-    read_state merges footers so the mixed layout reads consistently).
+    (streaming/statefold.py): the layout's sidecar records the union of
+    every segment's schema and ``read_state`` reads through it, so the
+    new column reads NULL from pre-evolution segments, touched buckets
+    append segments with the evolved schema, and untouched buckets
+    keep their pre-evolution bytes (byte-identity pinned in
+    tests/test_statefold.py).
 
     Here the event feed splits at mid-month: days 1-15 fold first
     WITHOUT a country column, days 16+ fold WITH one (derived
@@ -3057,8 +2951,8 @@ def streaming_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFram
     would need O(n) state per new vector.
 
     Per batch: |batch|·(dim+2) small (key, long) rows, partially
-    aggregated map-side before touching state; standing reads prune to
-    touched buckets. State is |labels|·(dim+2) rows TOTAL, independent
+    aggregated map-side and appended as one segment per touched bucket;
+    no standing row is read. State is |labels|·(dim+2) rows TOTAL, independent
     of stream length. After the availableNow drain the reconstructed
     dispersion must equal the one-shot batch oracle exactly (integer
     sufficient statistics — no drift, no float accumulation order).
@@ -3112,19 +3006,7 @@ def streaming_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFram
         )
         base(dimrows.unionByName(qrows).unionByName(nrows), batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_embedding_dispersion drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_embedding_dispersion")
 
     st = read_state(spark, state_dir)
     parts = F.split("skey", ":")
@@ -3198,7 +3080,7 @@ def streaming_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
       form, which is why the exact ledger is what ships.
 
     Per batch: map-side partial aggregation reduces the exchange to
-    O(distinct batch keys); standing reads prune to touched buckets.
+    O(distinct batch keys), appended as one segment per touched bucket.
     After the availableNow drain, the reconstruction must equal the
     batch datasheet oracle bit-for-bit (integers end-to-end; the one
     double, mean_tokens, is the same single division).
@@ -3233,19 +3115,7 @@ def streaming_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         base(_dsheet_fold_rows(batch_df, with_digest=True), batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_corpus_datasheet drain timed out")
+    _drain_staged(spark, docs.schema, stage, fold, ckpt, "streaming_corpus_datasheet")
 
     parsed = _dsheet_parse(read_state(spark, state_dir))
     dups = (
@@ -3451,21 +3321,9 @@ def _bounded_datasheet_drain(
         )
         reg_fold(regs, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_corpus_datasheet_bounded drain timed out"
-            )
+    _drain_staged(
+        spark, docs.schema, stage, fold, ckpt, "streaming_corpus_datasheet_bounded"
+    )
 
     exact = _dsheet_reassemble(_dsheet_parse(read_state(spark, cnt_dir)), None)
 
@@ -3606,19 +3464,7 @@ def streaming_k_anonymity_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_k_anonymity_monitor drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_k_anonymity_monitor")
 
     st = read_state(spark, state_dir)
     g = st.select(
@@ -3738,19 +3584,7 @@ def streaming_zonemap_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_zonemap_maintenance drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_zonemap_maintenance")
 
     st = read_state(spark, state_dir)
     return st.select(
@@ -3845,19 +3679,7 @@ def streaming_shingle_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(occ.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_shingle_span_dedup drain timed out")
+    _drain_staged(spark, occ.schema, stage, fold, ckpt, "streaming_shingle_span_dedup")
 
     dup = (
         read_state(spark, state_dir)
@@ -3944,19 +3766,7 @@ def streaming_maximal_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(occ.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_maximal_spans drain timed out")
+    _drain_staged(spark, occ.schema, stage, fold, ckpt, "streaming_maximal_spans")
 
     dup = (
         read_state(spark, state_dir)
@@ -4043,19 +3853,9 @@ def streaming_shingle_docsafe_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(occ.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_shingle_docsafe_dedup drain timed out")
+    _drain_staged(
+        spark, occ.schema, stage, fold, ckpt, "streaming_shingle_docsafe_dedup"
+    )
 
     dup = (
         read_state(spark, state_dir)
@@ -4149,19 +3949,7 @@ def streaming_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         base(comp.unionByName(cnt), batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(rows.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_centroid_drift drain timed out")
+    _drain_staged(spark, rows.schema, stage, fold, ckpt, "streaming_centroid_drift")
 
     st = read_state(spark, state_dir)
     parts = F.split("skey", ":")
@@ -4271,19 +4059,9 @@ def streaming_generalization_lattice(spark: SparkSession, sf_dir: str) -> DataFr
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_generalization_lattice drain timed out")
+    _drain_staged(
+        spark, ev.schema, stage, fold, ckpt, "streaming_generalization_lattice"
+    )
 
     st = read_state(spark, state_dir)
     parts = F.split("skey", "\\|")
@@ -4363,19 +4141,7 @@ def streaming_dp_noised_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_dp_noised_release drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, "streaming_dp_noised_release")
 
     st = read_state(spark, state_dir)
     parts = F.split("skey", "\\|")
@@ -4448,19 +4214,7 @@ def _drain_sensitive_cells(spark: SparkSession, sf_dir: str, prefix: str) -> Dat
         )
         base(rows, batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"streaming {prefix} drain timed out")
+    _drain_staged(spark, ev.schema, stage, fold, ckpt, f"streaming {prefix}")
 
     st = read_state(spark, state_dir)
     parts = F.split("skey", "\\|")
@@ -4707,28 +4461,16 @@ def _er_pruned_endpoint_labels(
     modulus comes from the layout's ``_n_buckets`` stamp (ADVICE r13).
     The label layout is an append-only log of versions, so an endpoint
     may come back several times; the rows carry ``v`` and the caller
-    keeps each doc's newest."""
-    from hailstorm_spark.streaming.statefold import state_bucket_count
+    keeps each doc's newest. Called only on committed state."""
+    from hailstorm_spark.streaming.statefold import probe_state
 
     endpoints = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    n_b = state_bucket_count(labels_dir, _ER_STATE_BUCKETS)
-    touched = [
-        r["b"]
-        for r in endpoints.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_b))
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
     return (
-        s.read.parquet(labels_dir)
-        .filter(F.col("bucket").isin(touched))
+        probe_state(s, labels_dir, endpoints, on="doc_id")
         .join(F.broadcast(endpoints), "doc_id")
         .select("doc_id", "cluster_id", "v")
     )
@@ -4739,33 +4481,16 @@ def _er_pair_probe(batch: DataFrame, rec_dir: str, keycol: str) -> DataFrame:
     multi-key streaming folds: candidates = batch × (the batch's
     touched standing block-buckets ∪ the batch itself) on ``keycol``,
     verified with the batch match rule's exact constants, normalized
-    a < b. The standing read is a static partition filter over the
-    ``bucket_col=keycol`` layout — the blocked-index promise."""
+    a < b. The standing read is ``probe_state`` over the
+    ``bucket_col=keycol`` layout, a static partition filter — the
+    blocked-index promise."""
     from hailstorm_spark.queries.dedup import _ER_CENTS_TOL, _ER_NAME_DIST
-    from hailstorm_spark.streaming.statefold import _has_state
+    from hailstorm_spark.streaming.statefold import probe_state
 
-    s = batch.sparkSession
     sides = [batch]
-    if _has_state(rec_dir):
-        from hailstorm_spark.streaming.statefold import state_bucket_count
-
-        n_b = state_bucket_count(rec_dir, _ER_STATE_BUCKETS)
-        touched = [
-            r["b"]
-            for r in batch.select(
-                F.pmod(F.xxhash64(keycol), F.lit(n_b))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        standing = (
-            s.read.parquet(rec_dir)
-            .filter(F.col("bucket").isin(touched))
-            .select(*batch.columns)
-        )
-        sides.append(standing)
+    standing = probe_state(batch.sparkSession, rec_dir, batch, on=keycol)
+    if standing is not None:
+        sides.append(standing.select(*batch.columns))
     cand = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
     a, c = batch.alias("a"), cand.alias("c")
     dist = F.levenshtein(F.col("a.c_name"), F.col("c.c_name"))
@@ -4893,19 +4618,7 @@ def _er_streaming_drain(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         match_fold(batch_df.drop("wv"), batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(rows.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"streaming {prefix} drain timed out")
+    _drain_staged(spark, rows.schema, stage, fold, ckpt, f"streaming {prefix}")
 
     recs = read_state(spark, rec_dir).select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment", "cents"
@@ -5044,25 +4757,18 @@ def _er_indexed_changes_local(
     never a LocalRelation, so an unpinned frame costs 32 near-empty
     tasks in EVERY consuming job (functions/localframe.py — the r14
     profiler attributed whole seconds per drain to these stages)."""
-    from hailstorm_spark.functions.hashing import spark_bucket
-    from hailstorm_spark.streaming.statefold import (
-        _has_state,
-        state_bucket_count,
-    )
+    from hailstorm_spark.streaming.statefold import probe_state
 
     out_schema = "doc_id long, cluster_id long, old_cluster_id long"
     if not pair_rows:
         return local_df(s, [], out_schema)
     endpoints = sorted({r[0] for r in pair_rows} | {r[1] for r in pair_rows})
     labels: dict = {}
-    if _has_state(labels_dir):
-        n_b = state_bucket_count(labels_dir, _ER_STATE_BUCKETS)
-        touched = sorted({spark_bucket(e, n_b) for e in endpoints})
+    standing = probe_state(s, labels_dir, endpoints)
+    if standing is not None:
         ep_df = local_df(s, [(e,) for e in endpoints], "doc_id long")
         rows = (
-            s.read.parquet(labels_dir)
-            .filter(F.col("bucket").isin(touched))
-            .join(F.broadcast(ep_df), "doc_id")
+            standing.join(F.broadcast(ep_df), "doc_id")
             .select("doc_id", "cluster_id", "v")
             .collect()
         )
@@ -5098,15 +4804,12 @@ def _er_indexed_changes_local(
         (e, mapping.get(e, e), None) for e in endpoints if e not in labels
     ]
     new_df = local_df(s, new_rows, out_schema)
-    if not changed or not _has_state(index_dir):
+    index = probe_state(s, index_dir, [o for o, _ in changed]) if changed else None
+    if index is None:
         return new_df
-    n_bi = state_bucket_count(index_dir, _ER_STATE_BUCKETS)
-    touched_i = sorted({spark_bucket(o, n_bi) for o, _ in changed})
     changed_df = local_df(s, changed, "old_label long, new_label long")
     members = (
-        s.read.parquet(index_dir)
-        .filter(F.col("bucket").isin(touched_i))
-        .filter(F.col("alive") == 1)
+        index.filter(F.col("alive") == 1)
         .join(
             F.broadcast(changed_df),
             F.col("icluster") == F.col("old_label"),
@@ -5173,7 +4876,7 @@ def _er_indexed_changes(
         DELTA_CLOSURE_LOCAL_CAP,
         _incremental_components_parts,
     )
-    from hailstorm_spark.streaming.statefold import _has_state
+    from hailstorm_spark.streaming.statefold import _has_state, probe_state
 
     fields = {f.name: f.dataType.simpleString() for f in pairs.schema.fields}
     if fields.get("doc_a") == "bigint" and fields.get("doc_b") == "bigint":
@@ -5214,48 +4917,26 @@ def _er_indexed_changes(
     # Spark jobs (the r13 shape spent a checkpoint + isEmpty + a
     # distinct-collect per trigger here). Above the cap the exact
     # prior shape runs unchanged.
-    from hailstorm_spark.operators.dedup import DELTA_CLOSURE_LOCAL_CAP
-
     changed_df = merged.filter(F.col("old_label") != F.col("new_label"))
     changed_rows = changed_df.limit(DELTA_CLOSURE_LOCAL_CAP + 1).collect()
+    if not changed_rows:
+        return new_rows
     if len(changed_rows) > DELTA_CLOSURE_LOCAL_CAP:
-        changed = changed_df.localCheckpoint(eager=True)
-        if not _has_state(index_dir) or changed.isEmpty():
-            return new_rows
+        changed = keys = changed_df.localCheckpoint(eager=True)
     else:
-        if not changed_rows or not _has_state(index_dir):
-            return new_rows
+        # local path: the probe buckets the collected rows with the
+        # pinned driver twin of pmod(xxhash64(·)) — zero Spark jobs
+        keys = [r["old_label"] for r in changed_rows]
         changed = local_df(
             s,
             [(r["old_label"], r["new_label"]) for r in changed_rows],
             "old_label long, new_label long",
         )
-    from hailstorm_spark.functions.hashing import spark_bucket
-    from hailstorm_spark.streaming.statefold import state_bucket_count
-
-    n_b = state_bucket_count(index_dir, _ER_STATE_BUCKETS)
-    if len(changed_rows) <= DELTA_CLOSURE_LOCAL_CAP:
-        # local path: the touched-bucket list comes straight from the
-        # collected rows via the pinned driver twin of
-        # pmod(xxhash64(·)) — zero Spark jobs
-        touched = sorted(
-            {spark_bucket(r["old_label"], n_b) for r in changed_rows}
-        )
-    else:
-        touched = [
-            r["b"]
-            for r in changed.select(
-                F.pmod(F.xxhash64("old_label"), F.lit(n_b))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
+    index = probe_state(s, index_dir, keys, on="old_label")
+    if index is None:
+        return new_rows
     members = (
-        s.read.parquet(index_dir)
-        .filter(F.col("bucket").isin(touched))
-        .filter(F.col("alive") == 1)
+        index.filter(F.col("alive") == 1)
         .join(
             F.broadcast(changed),
             F.col("icluster") == F.col("old_label"),
@@ -5977,19 +5658,7 @@ def streaming_er_multikey_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             overlap=True,
         )
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(rows.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_er_multikey_match drain timed out")
+    _drain_staged(spark, rows.schema, stage, fold, ckpt, "streaming_er_multikey_match")
 
     prs = read_state(spark, pair_dir).select(
         "doc_a",
@@ -6135,21 +5804,9 @@ def streaming_er_labels_cluster_indexed(
             )
         fold_inner(batch_df.drop("wv"), batch_id)
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(rows.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_er_labels_cluster_indexed drain timed out"
-            )
+    _drain_staged(
+        spark, rows.schema, stage, fold, ckpt, "streaming_er_labels_cluster_indexed"
+    )
 
     labels = read_state(spark, os.path.join(work, "labels"))
     return _er_cluster_readout(
@@ -6271,19 +5928,7 @@ def streaming_er_qgram_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             overlap=True,
         )
 
-    with _state_width(spark):
-        q = (
-            spark.readStream.schema(rows.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_er_qgram_match drain timed out")
+    _drain_staged(spark, rows.schema, stage, fold, ckpt, "streaming_er_qgram_match")
 
     prs = read_state(spark, pair_dir).select("doc_a", "doc_b")
     attrs = (
@@ -6454,21 +6099,9 @@ def _register_er_qgram_clusters() -> None:
                 overlap=True,
             )
 
-        with _state_width(spark):
-            q = (
-                spark.readStream.schema(rows.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_er_qgram_clusters drain timed out"
-                )
+        _drain_staged(
+            spark, rows.schema, stage, fold, ckpt, "streaming_er_qgram_clusters"
+        )
 
         labels = read_state(spark, labels_dir)
         return _er_cluster_readout(

@@ -41,6 +41,7 @@ filesystem. ``jvm/build.sh`` rebuilds the jar from its source.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkConf, SparkContext
@@ -122,3 +123,23 @@ def build_spark(
     spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def pinned_confs(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session for the block, then give each key
+    back exactly what it had: its old value, or no value if it was unset
+    (setting a default back explicitly would still change what a later
+    ``conf.get`` returns). Session-global, not thread-local: overlapping
+    blocks are race-free only when they pin the same values."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

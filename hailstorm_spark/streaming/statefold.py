@@ -1,11 +1,13 @@
 """Bucketed keyed-state folds for foreachBatch streaming queries.
 
-The naive versioned fold (state_v{N} = merge(state_v{N-1}, batch))
-rewrites the ENTIRE state table every micro-batch: correct, but at
-100 TB the per-batch write cost is O(|state|), not O(|batch|). The
-folds here keep state in ONE directory, hash-partitioned on
-``bucket = pmod(xxhash64(key), n_buckets)``, as a LOG of per-key
-partials merged on read:
+Every keyed state the streaming queries keep lives here, and is read
+only through this module: ``read_state`` for the whole table, one row
+per key, and ``probe_state`` for the raw rows of the buckets some keys
+hash to. A versioned full copy per batch (version N = merge(version
+N-1, batch)) would rewrite the ENTIRE state every micro-batch: O(|state|)
+per batch, not O(|batch|). The folds here keep state in ONE directory,
+hash-partitioned on ``bucket = pmod(xxhash64(key), n_buckets)``, as a
+LOG of per-key partials merged on read:
 
 1. each batch is reduced to one row per (key, bucket) with the
    store's merge — per-column monoid ops (``bucketed_monoid_fold``)
@@ -88,16 +90,19 @@ import json
 import os
 import shutil
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from hailstorm_spark.functions.hashing import spark_bucket
+from hailstorm_spark.session import pinned_confs
+
 __all__ = [
     "bucketed_latest_fold",
     "bucketed_monoid_fold",
     "compact_expired_tombstones",
+    "probe_state",
     "read_state",
     "rebucket_state",
     "state_bucket_count",
@@ -151,7 +156,6 @@ def _fold_width(s, n_buckets: int) -> int:
     return min(n_buckets, s.sparkContext.defaultParallelism)
 
 
-@contextmanager
 def _fold_confs(s, width: int):
     """Run a fold's actions with AQE off and the shuffle width set to
     ``width`` (:func:`_fold_width`), not by the session. The fold plans
@@ -165,10 +169,8 @@ def _fold_confs(s, width: int):
     bucket per batch: the bucket count is the state layer's
     parallelism dial (SCALE.md), capped by the cores that can run it.
 
-    Session-conf toggle (not thread-local); on exit each key gets back
-    exactly what it had — its old value, or no value if it was unset
-    (setting a default back explicitly would still change what a later
-    ``conf.get`` returns). Concurrency contract (r15): folds either run
+    Session-conf toggle through ``session.pinned_confs`` (an unset key
+    stays unset). Concurrency contract (r15): folds either run
     serially inside foreachBatch, or overlap under
     streaming_queries._run_folds, which pins these exact values for
     the whole overlap region first — every concurrent save/set then
@@ -180,21 +182,13 @@ def _fold_confs(s, width: int):
     fold's width for its intermediate exchanges — still correct, and
     the writers' ``repartitionById`` width is fixed in each plan, so
     the file layout is unaffected."""
-    settings = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(width),
-    }
-    saved = {k: s.conf.get(k, None) for k in settings}
-    for k, v in settings.items():
-        s.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                s.conf.unset(k)
-            else:
-                s.conf.set(k, v)
+    return pinned_confs(
+        s,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(width),
+        },
+    )
 
 
 def _has_state(state_dir: str) -> bool:
@@ -537,8 +531,8 @@ def bucketed_latest_fold(
     one row per key; a column the batch stopped sending leaves the
     bucket's files then. Layouts written by the earlier read-rewrite
     fold (one row per key) upgrade in place as a single segment.
-    Readers that bypass ``read_state`` must resolve each key to its
-    newest version themselves (the ER label readers do).
+    ``probe_state`` returns raw rows, so its callers resolve each key
+    to its newest version themselves (the ER label readers do).
 
     ``bucket_col`` decouples co-location from identity: an INDEX-shaped
     consumer — the streaming ER cluster index, keyed by (doc, cluster)
@@ -1073,6 +1067,41 @@ def read_state(spark, state_dir: str) -> DataFrame:
     if doc is not None:
         return _merge(doc, df)
     return df.drop("_b") if "_b" in df.columns else df
+
+
+def probe_state(spark, state_dir: str, keys, on: str | None = None):
+    """The standing rows of the buckets ``keys`` hash to, under a static
+    ``bucket`` partition filter, or None before the first commit.
+
+    ``keys`` is a DataFrame whose column ``on`` holds the keys (one
+    bounded collect of at most ``n_buckets`` bucket ids), or driver-side
+    values, bucketed with the ``spark_bucket`` twin (no job). The
+    modulus is the layout's ``_n_buckets`` marker, so a rebucketed store
+    is never probed with a stale count; a layout without one predates
+    the marker and is read whole (callers join on the key, so extra
+    buckets are only slower). Log-structured layouts read through their
+    sidecar's union schema, the others as they are.
+
+    Rows come back raw — ``bucket``, ``_b`` and every segment's version
+    of a key — and the caller keeps what it needs: a latest-wins log can
+    hold several versions of a key."""
+    if not _has_state(state_dir):
+        return None
+    doc = _read_sidecar(state_dir)
+    rows = _scan(spark, state_dir, doc) if doc else spark.read.parquet(state_dir)
+    n_b = state_bucket_count(state_dir, 0)
+    if not n_b:
+        return rows
+    if isinstance(keys, DataFrame):
+        buckets = [
+            r[0]
+            for r in keys.select(F.pmod(F.xxhash64(on), F.lit(n_b)).cast("int"))
+            .distinct()
+            .collect()
+        ]
+    else:
+        buckets = sorted({spark_bucket(k, n_b) for k in keys})
+    return rows.filter(F.col("bucket").isin(buckets))
 
 
 def rebucket_state(

@@ -341,10 +341,16 @@ def test_fold_writers_are_min_buckets_cores_one_file_per_bucket(
 
 def test_folds_leave_session_confs_as_found(spark, tmp_path):
     """A fold call, two folds overlapped by ``_run_folds``, a
-    partitioned upsert and a matview refresh leave the three session
-    settings as they found them — including a key that was unset,
-    which must stay unset."""
-    from hailstorm_spark.queries.streaming_queries import _run_folds
+    partitioned upsert, a matview refresh, a staged streaming drain and
+    the connected-components loop leave the three session settings as
+    they found them — including a key that was unset, which must stay
+    unset (the drain and the loop are run with the shuffle width
+    unset)."""
+    from hailstorm_spark.operators.dedup import connected_components
+    from hailstorm_spark.queries.streaming_queries import (
+        _run_folds,
+        streaming_pchart_monitor,
+    )
 
     keys = (
         "spark.sql.shuffle.partitions",
@@ -402,6 +408,21 @@ def test_folds_leave_session_confs_as_found(spark, tmp_path):
         assert snapshot() == found
         events_matview_incremental_daily(spark, SF_DIR)
         assert snapshot() == found
+        # the drain's state-width pin and the loop's shuffle-width pin,
+        # on a session where the shuffle width is unset
+        spark.conf.unset(keys[0])
+        found[keys[0]] = None
+        assert snapshot() == found
+        streaming_pchart_monitor(spark, SF_DIR)
+        assert snapshot() == found
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+        )
+        labels = connected_components(edges, local_cap=0)
+        assert snapshot() == found
+        assert {r[0]: r[1] for r in labels.collect()} == {
+            1: 1, 2: 1, 3: 1, 5: 5, 6: 5
+        }
     finally:
         for k, v in original.items():
             if v is None:
