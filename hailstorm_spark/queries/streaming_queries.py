@@ -1774,7 +1774,7 @@ def _register_streaming_upsert() -> None:
         must equal the batch compaction.
 
         State is a single BUCKET-PARTITIONED table maintained in place
-        (bucket = pmod(xxhash64(user_id), B)); each micro-batch reads
+        (hash-bucketed on user_id by statefold); each micro-batch reads
         back ONLY the buckets its keys hash into (partition-pruned
         scan) and rewrites ONLY those via dynamic partition overwrite
         — per-batch write cost is O(|batch| + touched buckets), never
@@ -2521,7 +2521,7 @@ def streaming_cdc_apply_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The state discipline is the BUCKETED in-place fold
     (streaming/statefold.py): the table is hash-partitioned on
-    bucket = pmod(xxhash64(user_id), B), each batch reads back and
+    user_id into B buckets, each batch reads back and
     rewrites ONLY the buckets its keys touch (partition-pruned scan +
     dynamic partition overwrite) — per-batch cost O(|batch| + touched
     buckets), never O(|state|), with replay idempotence coming from
@@ -4861,9 +4861,9 @@ def _er_indexed_changes(
     the same bounded-collect class to the pairs themselves, which the
     monoid pair fold bounds by the batch's blocks — never by state).
     One collect of the ≤cap pairs + one collect of the ≤2·|delta|
-    pruned endpoint labels (bucket ids computed with the driver-side
-    ``spark_bucket`` twin of ``pmod(xxhash64(...))``, bit-equality
-    pinned in tests/test_statefold.py) replace the r13 chain of
+    pruned endpoint labels (bucket ids computed driver-side by
+    ``statefold.probe_state``, bit-equality with the layout pinned in
+    tests/test_statefold.py) replace the r13 chain of
     localCheckpoint(pruned) → localCheckpoint(tagged) → closure
     collect → changed collect → two createDataFrame round-trips —
     measured ~5-7 s of scheduling floor and py4j serialization per
@@ -4924,8 +4924,8 @@ def _er_indexed_changes(
     if len(changed_rows) > DELTA_CLOSURE_LOCAL_CAP:
         changed = keys = changed_df.localCheckpoint(eager=True)
     else:
-        # local path: the probe buckets the collected rows with the
-        # pinned driver twin of pmod(xxhash64(·)) — zero Spark jobs
+        # local path: the probe buckets the collected rows on the
+        # driver — zero Spark jobs
         keys = [r["old_label"] for r in changed_rows]
         changed = local_df(
             s,
@@ -5152,25 +5152,25 @@ def _indexed_label_step(
             "v",
         )
         # r15: driver-local change rows give each mutable fold its EXACT
-        # touched-bucket set for free (spark_bucket = the pinned driver
-        # twin of pmod(xxhash64)), so the folds skip their per-trigger
-        # touched-distinct job and go straight to the pruned merge write
+        # touched-bucket set for free (statefold.key_buckets, no job),
+        # so the folds skip their per-trigger touched-distinct job and
+        # go straight to the pruned merge write
         idx_hint = lab_hint = None
         if change_rows is not None:
-            from hailstorm_spark.functions.hashing import spark_bucket
+            from hailstorm_spark.streaming.statefold import key_buckets
 
-            idx_hint = {
-                spark_bucket(r["cluster_id"], index_fold.n_buckets)
-                for r in change_rows
-            } | {
-                spark_bucket(r["old_cluster_id"], index_fold.n_buckets)
-                for r in change_rows
-                if r["old_cluster_id"] is not None
-            }
-            lab_hint = {
-                spark_bucket(r["doc_id"], label_fold.n_buckets)
-                for r in change_rows
-            }
+            idx_hint = key_buckets(
+                [r["cluster_id"] for r in change_rows]
+                + [
+                    r["old_cluster_id"]
+                    for r in change_rows
+                    if r["old_cluster_id"] is not None
+                ],
+                index_fold.n_buckets,
+            )
+            lab_hint = key_buckets(
+                [r["doc_id"] for r in change_rows], label_fold.n_buckets
+            )
         def run_index() -> None:
             index_fold(
                 alive.unionByName(tombs), batch_id, touched_hint=idx_hint
@@ -5179,22 +5179,24 @@ def _indexed_label_step(
             # record which buckets received tombstones at this version,
             # so the retention sweep's probe prunes to exactly those
             # buckets. Driver-local change rows give the bucket ids for
-            # free (the spark_bucket twin of the layout's
-            # pmod(xxhash64)); the rare above-cap / artifact-retry paths
-            # mark every bucket — conservative (over-probing), never
-            # unsafe.
-            from hailstorm_spark.functions.hashing import spark_bucket
+            # free (statefold.key_buckets); the rare above-cap /
+            # artifact-retry paths mark every bucket — conservative
+            # (over-probing), never unsafe.
             from hailstorm_spark.streaming.statefold import (
+                key_buckets,
                 state_bucket_count,
             )
 
             n_bi = state_bucket_count(index_dir, _ER_STATE_BUCKETS)
             if change_rows is not None:
-                tomb_buckets = {
-                    spark_bucket(r["old_cluster_id"], n_bi)
-                    for r in change_rows
-                    if r["old_cluster_id"] is not None
-                }
+                tomb_buckets = key_buckets(
+                    [
+                        r["old_cluster_id"]
+                        for r in change_rows
+                        if r["old_cluster_id"] is not None
+                    ],
+                    n_bi,
+                )
             else:
                 tomb_buckets = set(range(n_bi))
             if tomb_buckets:
