@@ -26,12 +26,12 @@ LOG of per-key partials merged on read:
    is merged down to one row per key by the batch that touches it, so
    read fan-in stays bounded.
 
-A fold step costs O(|batch|) and is one Spark job. A batch that Spark
-estimates under ``_DRIVER_APPEND_BYTES`` is collected once through
-Arrow and its segments are written from the driver, so the job has no
-write stage (2 stages and 5 tasks on four cores, against 3 and 9);
-larger batches, and batches Spark cannot estimate, are written by
-Spark. Both writers leave the same files in the same layout, and every
+A fold step costs O(|batch|) and is one Spark job. A per-(key, bucket)
+partial that Spark estimates under ``_DRIVER_APPEND_BYTES`` is
+collected once through Arrow and its segments are written from the
+driver, so the job has no write stage (2 stages and 5 tasks on four
+cores, against 3 and 9); larger partials, and those Spark cannot
+estimate, are written by Spark. Both writers leave the same files in the same layout, and every
 reader, compaction and migration reads either's. ``n_buckets`` is the
 granularity dial (SCALE.md, "State bucket sizing").
 
@@ -65,9 +65,10 @@ crash mid-commit can lose the rewritten buckets' standing rows.
 Appends are not at risk. A crashed Spark append leaves only staging
 files. A crashed driver append leaves some of the batch's buckets with
 their new segment and the rest without: each file appears by one
-rename, after its ``.crc``, and hidden temporary names are never read.
-The replay then skips the buckets already written (the monoid fold's
-``_b`` fence) or re-appends rows the merge absorbs (latest-wins). So on
+rename, and hidden temporary names are never read. The replay, in a
+fresh closure or a retry in the same one, then skips the buckets
+already written (the monoid fold's ``_b`` fence) or re-appends rows
+the merge absorbs (latest-wins). So on
 the log-structured layouts the caveat applies to compaction alone.
 Where mid-commit crashes must be survivable, ride a transactional
 table format; this module is the layout/algorithm layer, not the
@@ -112,9 +113,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
     DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
     LongType,
     MapType,
+    ShortType,
     StringType,
     StructType,
     TimestampType,
@@ -147,18 +156,28 @@ _MONOID_FILE = "_monoid.json"
 #: K is about merge amortization and is scale-independent, so it is a
 #: constant, not a setting.
 _COMPACT_SEGMENTS = 8
-#: driver-append bound, in bytes of Spark's own size estimate of the
-#: batch (the optimized plan's ``sizeInBytes``): a monoid or latest-wins
-#: log fold whose batch is estimated under it collects its per-(key,
-#: bucket) partial once through Arrow and appends the segments from the
-#: driver (:func:`_write_segments`), skipping Spark's write stage and
-#: committer: on four cores a warm 20k-row fold call went from 3 stages
-#: and 9 tasks to 2 and 5. A larger batch, or one Spark cannot estimate
-#: (``createDataFrame`` and RDD frames report ``Long.MaxValue``), keeps
-#: the Spark write. Sized like a broadcast: it bounds what one fold
-#: holds on the driver, which does not grow with the state, so it is a
-#: constant, not a setting.
-_DRIVER_APPEND_BYTES = 16 << 20
+#: driver-append bound, in bytes of Spark's own size estimate of a
+#: fold's per-(key, bucket) partial (the optimized plan's
+#: ``sizeInBytes``): a monoid or latest-wins log fold whose partial is
+#: estimated under it collects the partial once through Arrow and
+#: appends the segments from the driver (:func:`_write_segments`),
+#: skipping Spark's write stage and committer: on four cores a warm
+#: 20k-row fold call went from 3 stages and 9 tasks to 2 and 5. A larger
+#: partial, or one Spark cannot estimate (``createDataFrame`` and RDD
+#: frames report ``Long.MaxValue``), keeps the Spark write. Taken from
+#: the measured crossover of the two writers (warm fold steps, median of
+#: 4, four cores, 16 buckets, parquet batches of distinct keys;
+#: driver vs Spark write, monoid / latest-wins): 0.47 MB estimated
+#: (20k rows) 264 / 254 vs 398 / 397 ms; 4.4 MB (200k) 625 / 877 vs
+#: 630 / 948; 9.9 MB (500k) 1,108 / 1,714 vs 1,167 / 1,606; 19 MB (1M)
+#: 1,952 / 3,153 vs 1,832 / 3,091; 38 MB (2M) 2,747 / 3,709 vs
+#: 2,407 / 3,768. Skewed keys shrink the partial below its estimate and
+#: move the crossover up (Zipf 1.1: 32 MB estimated still 981 / 2,262 vs
+#: 1,060 / 2,403), so the bound is set where distinct keys stop
+#: winning. It caps what one fold collects on the driver (about 1.3
+#: times the estimate in Arrow for distinct longs), which does not grow
+#: with the state, so it is a constant, not a setting.
+_DRIVER_APPEND_BYTES = 8 << 20
 #: bytes per checksum of the ``.crc`` files the driver append writes:
 #: Hadoop's ``file.bytes-per-checksum`` default. A reader takes the
 #: value from each file's header.
@@ -539,26 +558,46 @@ def _append_segments(
             ).parquet(state_dir)
 
 
+#: atomic Spark types whose Arrow type pyarrow writes as the parquet
+#: type Spark reads back as the same Spark type. Interval, variant,
+#: null and user-defined types are not among them (an interval comes
+#: back as a long), so a partial holding one takes the Spark write.
+_ROUND_TRIP_TYPES = (
+    BooleanType,
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    FloatType,
+    DoubleType,
+    DecimalType,
+    StringType,
+    BinaryType,
+    DateType,
+    TimestampType,
+)
+
+
 def _round_trips(t) -> bool:
     """Whether a Spark type comes back unchanged through Arrow, a
-    pyarrow-written parquet file and Spark's parquet reader. Only the
-    types the folds need are admitted; the rest take the Spark write."""
+    pyarrow-written parquet file and Spark's parquet reader."""
     if isinstance(t, StructType):
         return all(_round_trips(f.dataType) for f in t.fields)
     if isinstance(t, ArrayType):
         return _round_trips(t.elementType)
     if isinstance(t, MapType):
         return _round_trips(t.keyType) and _round_trips(t.valueType)
-    return isinstance(t, (LongType, StringType, TimestampType, DecimalType))
+    return isinstance(t, _ROUND_TRIP_TYPES)
 
 
-def _driver_appendable(batch_df: DataFrame, part_schema: StructType) -> bool:
-    """Whether a fold appends this batch from the driver: every column
-    of its partial but ``bucket`` round-trips (:func:`_round_trips`)
-    and Spark estimates the batch under ``_DRIVER_APPEND_BYTES``."""
-    if not all(_round_trips(f.dataType) for f in part_schema if f.name != "bucket"):
+def _driver_appendable(partial: DataFrame) -> bool:
+    """Whether a fold appends its per-(key, bucket) ``partial`` from
+    the driver: every column but ``bucket`` round-trips
+    (:func:`_round_trips`) and Spark estimates the partial — the rows
+    the driver would collect — under ``_DRIVER_APPEND_BYTES``."""
+    if not all(_round_trips(f.dataType) for f in partial.schema if f.name != "bucket"):
         return False
-    size = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = partial._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return int(size) < _DRIVER_APPEND_BYTES
 
 
@@ -598,34 +637,47 @@ def _write_segments(s, state_dir: str, table, buckets) -> None:
     dictionary encoding (with pyarrow's default one, the latest-wins
     segments of a 20k-row batch of mostly unique longs came out 17%
     larger than Spark's, without it 3% smaller), snappy, a Hadoop
-    ``.crc`` beside it
-    (:func:`_hadoop_crc`), and Hadoop's modes under the configured
-    ``fs.permissions.umask-mode``, not the process umask. The ``.crc``
-    is renamed into place before its data file, so a listed segment
-    always has its checksum. Local filesystem only, like the layout's
-    markers."""
+    ``.crc`` beside it (:func:`_hadoop_crc`), and Hadoop's modes under
+    the configured ``fs.permissions.umask-mode``, not the process umask.
+    The ``.crc`` is renamed into place before its data file, so a listed
+    segment always has its checksum. Local filesystem only, like the
+    layout's markers.
+
+    Writing through the session's Hadoop ``FileSystem`` instead (create,
+    write, close, rename) would make Hadoop produce the ``.crc`` and the
+    modes, but costs six py4j calls per file at about 0.8 ms each: 16
+    segments of a 20k-row partial took 76 ms that way against 25 ms
+    here, and 179 ms against 80 ms at 200k rows (median of 10, four
+    cores)."""
     umask = s._jvm.org.apache.hadoop.fs.permission.FsPermission.getUMask(
         s._jsc.hadoopConfiguration()
     ).toShort()
-    bucket = table["bucket"]
+    table = table.sort_by("bucket")
     data = table.drop_columns(["bucket"])
-    for b in buckets:
-        d = os.path.join(state_dir, f"bucket={b}")
-        if not os.path.isdir(d):
-            os.makedirs(d)
-            os.chmod(d, 0o777 & ~umask)
-        sink = pa.BufferOutputStream()
-        pq.write_table(
-            data.filter(pc.equal(bucket, b)),
-            sink,
-            compression="snappy",
-            use_dictionary=False,
-            store_schema=False,
-        )
-        body = sink.getvalue()
-        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
-        _publish(os.path.join(d, f".{name}.crc"), _hadoop_crc(body), 0o666 & ~umask)
-        _publish(os.path.join(d, name), body, 0o666 & ~umask)
+    todo = set(buckets)
+    offset = 0
+    # the table is sorted, so value_counts lists the buckets ascending
+    # and each bucket's rows are one slice
+    for entry in pc.value_counts(table["bucket"]).to_pylist():
+        b, n = entry["values"], entry["counts"]
+        if b in todo:
+            d = os.path.join(state_dir, f"bucket={b}")
+            if not os.path.isdir(d):
+                os.makedirs(d)
+                os.chmod(d, 0o777 & ~umask)
+            sink = pa.BufferOutputStream()
+            pq.write_table(
+                data.slice(offset, n),
+                sink,
+                compression="snappy",
+                use_dictionary=False,
+                store_schema=False,
+            )
+            body = sink.getvalue()
+            name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+            _publish(os.path.join(d, f".{name}.crc"), _hadoop_crc(body), 0o666 & ~umask)
+            _publish(os.path.join(d, name), body, 0o666 & ~umask)
+        offset += n
 
 
 def _driver_append(
@@ -738,8 +790,10 @@ def bucketed_latest_fold(
     a batch id STRICTLY ABOVE the closure's last-committed id cannot be
     a replay — the touched collect and the fence scan are skipped and
     the fold is ONE job. The first call of a closure (a fresh process —
-    exactly where a replay can arrive) and any id at/below the frontier
-    take the fenced path. So does an immutable-store call with
+    exactly where a replay can arrive), any id at/below the frontier,
+    and the call after one that raised (the frontier is cleared until a
+    call commits, as a failed call may have written some of its bucket
+    files) take the fenced path. So does an immutable-store call with
     ``touched_log`` or ``touched_hint``; the monoid fold logs the touched
     set on the fast path too, without a fence scan.
     """
@@ -802,7 +856,7 @@ def bucketed_latest_fold(
         if not immutable and not rewrite:
             winners = _latest_winners(rows, key, order_cols, ("bucket",))
             table = touched = None
-            if _driver_appendable(batch_df, rows.schema):
+            if _driver_appendable(winners):
                 table, touched = _collect_partial(s, winners, width)
             elif touched_log is not None or touched_hint is not None:
                 touched = _touched(s, rows, width, touched_hint)
@@ -829,22 +883,27 @@ def bucketed_latest_fold(
                     touched,
                 )
             return
+        # cleared until this call commits: a call that fails part-way
+        # leaves the next one fenced (see the fast path below)
+        last, frontier[0] = frontier[0], None
+        committed = batch_id if last is None else max(last, batch_id)
         if (
             immutable
             and touched_log is None
             and touched_hint is None
-            and frontier[0] is not None
-            and batch_id > frontier[0]
+            and last is not None
+            and batch_id > last
         ):
             # committed-frontier fast path: provably not a replay, so
             # no touched collect and no fence scan — one append job
             _imm_append(s, rows, batch_id, None, width)
-            frontier[0] = batch_id
+            frontier[0] = committed
             return
         touched = _touched(s, rows, width, touched_hint)
         if touched_log is not None:
             touched_log.append((batch_id, touched))
         if not touched:  # empty batch (e.g. a no-data trigger): no-op
+            frontier[0] = last
             return
         if immutable:
             todo = touched
@@ -865,10 +924,10 @@ def bucketed_latest_fold(
                     }
                 todo = tuple(b for b in touched if b not in applied)
                 if not todo:
-                    frontier[0] = max(frontier[0] or -1, batch_id)
+                    frontier[0] = committed
                     return
             _imm_append(s, rows, batch_id, todo, width)
-            frontier[0] = max(frontier[0] or -1, batch_id)
+            frontier[0] = committed
             return
         # read-rewrite (index stores, bucket_col != key)
         if _has_state(state_dir):
@@ -1033,17 +1092,22 @@ def bucketed_monoid_fold(
             .withColumn("_b", F.lit(batch_id).cast("long"))
         )
         _stamp_sidecar(s, state_dir, layout, partial.schema)
+        # cleared until this call commits: a call that fails after some
+        # of its bucket files (a driver append, or a compaction after a
+        # Spark append) leaves the next one fenced
+        last, frontier[0] = frontier[0], None
+        committed = batch_id if last is None else max(last, batch_id)
         # committed-frontier fast path: provably not a replay (see
         # bucketed_latest_fold), so no fence scan
-        fast = not adopted and frontier[0] is not None and batch_id > frontier[0]
+        fast = not adopted and last is not None and batch_id > last
         table = None
-        if _driver_appendable(batch_df, partial.schema):
+        if _driver_appendable(partial):
             # one collect gives the rows to append and the touched set
             table, touched = _collect_partial(s, partial, width)
         elif touched_log is None and (fast or not _has_state(state_dir)):
             # nothing to fence: one append job, no collects
             _append(s, partial, None, width)
-            frontier[0] = max(frontier[0] or -1, batch_id)
+            frontier[0] = committed
             return
         elif touched_hint is not None:
             touched = tuple(sorted(set(touched_hint)))
@@ -1118,7 +1182,7 @@ def bucketed_monoid_fold(
                 _driver_append(
                     s, state_dir, table, todo, partial.schema, width, merge
                 )
-        frontier[0] = max(frontier[0] or -1, batch_id)
+        frontier[0] = committed
 
     # layout facts for callers that compute touched_hint driver-side
     fold.n_buckets = n_buckets

@@ -1,6 +1,6 @@
 """The driver append of small monoid and latest-wins fold batches.
 
-A fold whose batch Spark estimates under ``_DRIVER_APPEND_BYTES``
+A fold whose partial Spark estimates under ``_DRIVER_APPEND_BYTES``
 collects its per-(key, bucket) partial once through Arrow and writes
 one parquet segment per touched bucket from the driver; every other
 batch keeps Spark's write. The claims these pin:
@@ -11,10 +11,13 @@ batch keeps Spark's write. The claims these pin:
   filesystem writes, byte for byte, and a corrupted file fails the read
   with a ``ChecksumException``;
 - a crash after some of a batch's bucket files are written loses
-  nothing and adds nothing twice: a monoid replay goes through the
-  ``_b`` fence, a latest-wins replay through its idempotent merge;
-- struct keys, timestamps, decimals, arrays and maps round-trip, and
-  other types take the Spark write;
+  nothing and adds nothing twice, whether the replay comes through a
+  fresh closure or as a retry of the same one: a monoid replay goes
+  through the ``_b`` fence, a latest-wins replay through its
+  idempotent merge;
+- struct keys and the atomic types Spark reads back from a pyarrow
+  file as they were round-trip, and other types (intervals) take the
+  Spark write;
 - a warm driver-path fold call is one job of two stages.
 
 Batches are parquet files read back (their plans carry a size
@@ -195,8 +198,9 @@ def _crash_after(monkeypatch, k: int) -> list[int]:
     return written
 
 
+@pytest.mark.parametrize("replay", ["fresh", "retry"])
 @pytest.mark.parametrize("k", [1, 3])
-def test_crash_mid_append_then_replay_is_exactly_once(spark, tmp_path, monkeypatch, k):
+def test_crash_mid_append_then_replay_is_exactly_once(spark, tmp_path, monkeypatch, k, replay):
     md, ld = str(tmp_path / "monoid"), str(tmp_path / "latest")
 
     def folds():  # a fresh closure per process, as after a restart
@@ -218,7 +222,8 @@ def test_crash_mid_append_then_replay_is_exactly_once(spark, tmp_path, monkeypat
         with pytest.raises(_Crash):
             latest(_latest_in(df1), 1)
     assert _state(spark, md, ld) != _truth([0, 1])  # the crash left batch 1 half applied
-    monoid, latest = folds()
+    if replay == "fresh":  # a restarted process; "retry" re-delivers to the same closures
+        monoid, latest = folds()
     for i in (1, 2):
         df = _batch(spark, tmp_path, i)
         monoid(_monoid_in(df), i)
@@ -228,14 +233,17 @@ def test_crash_mid_append_then_replay_is_exactly_once(spark, tmp_path, monkeypat
 
 def test_types_round_trip_and_others_take_the_spark_write(spark, tmp_path):
     ts = datetime.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    day = datetime.date(2024, 3, 1)
     rows = [
-        ((f"a{i}", i), ts + datetime.timedelta(hours=i), decimal.Decimal(f"{i}.25"),
-         [i, i + 1], {"n": i}, i)
+        ((f"a{i}", i, day + datetime.timedelta(days=i)), ts + datetime.timedelta(hours=i),
+         decimal.Decimal(f"{i}.25"), [i, i + 1], {"n": i}, i, i, i, i / 4, i / 8,
+         i % 2 == 0, bytes([i]), i)
         for i in range(12)
     ]
     schema = (
-        "k struct<name: string, n: long>, ts timestamp, amount decimal(12,2), "
-        "xs array<long>, m map<string, long>, uid long"
+        "k struct<name: string, n: long, day: date>, ts timestamp, amount decimal(12,2), "
+        "xs array<long>, m map<string, long>, tiny byte, short_ short, small int, "
+        "f float, x double, flag boolean, raw binary, uid long"
     )
     src = str(tmp_path / "typed.parquet")
     spark.createDataFrame(rows, schema).write.parquet(src)
@@ -249,12 +257,21 @@ def test_types_round_trip_and_others_take_the_spark_write(spark, tmp_path):
         map(tuple, spark.read.parquet(src).collect())
     )
 
-    # an int column does not qualify: the Spark write, same answer
+    # a date key, as the daily monoid folds have, takes the driver write
     d2 = str(tmp_path / "monoid")
-    fold2 = bucketed_monoid_fold(d2, key="n", cols={"c": "sum"}, n_buckets=B)
-    fold2(spark.read.parquet(src).select(F.col("k.n").cast("int").alias("n"), F.lit(1).alias("c")), 0)
-    assert {_writer(os.path.join(d2, p)) for p in _files(d2)} == {"spark"}
+    fold2 = bucketed_monoid_fold(d2, key="day", cols={"c": "sum"}, n_buckets=B)
+    fold2(spark.read.parquet(src).select(F.col("k.day").alias("day"), F.lit(1).alias("c")), 0)
+    assert {_writer(os.path.join(d2, p)) for p in _files(d2)} == {"driver"}
+    assert read_state(spark, d2).schema["day"].dataType.simpleString() == "date"
     assert read_state(spark, d2).count() == len(rows)
+
+    # an interval comes back from a pyarrow file as a long: the Spark write
+    d3 = str(tmp_path / "interval")
+    fold3 = bucketed_latest_fold(d3, key="uid", order_cols=("uid",), n_buckets=B)
+    fold3(spark.read.parquet(src).select("uid", F.make_dt_interval(secs=F.col("uid")).alias("gap")), 0)
+    assert {_writer(os.path.join(d3, p)) for p in _files(d3)} == {"spark"}
+    assert read_state(spark, d3).schema["gap"].dataType.simpleString() == "interval day to second"
+    assert read_state(spark, d3).count() == len(rows)
 
 
 def test_warm_driver_fold_call_is_one_job_of_two_stages(spark, tmp_path):
