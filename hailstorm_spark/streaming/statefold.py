@@ -21,10 +21,16 @@ LOG of per-key partials merged on read:
    across batches);
 3. ``read_state`` merges each key's segments with the same op, driven
    by the ``_monoid.json`` sidecar the folds stamp (key, merge, union
-   schema);
+   schema). A layout whose segment files total under
+   ``_DRIVER_READ_BYTES``, and whose key and merge pyarrow does
+   exactly, is read and merged on the driver: each file checked
+   against its Hadoop ``.crc``, parsed by pyarrow and merged in Arrow,
+   one Spark job to materialise instead of a scan and an exchange.
+   Others take a Spark scan and merge;
 4. a touched bucket whose segment count reaches ``_COMPACT_SEGMENTS``
    is merged down to one row per key by the batch that touches it, so
-   read fan-in stays bounded.
+   read fan-in stays bounded. A driver-appended batch compacts small
+   buckets on the driver with the read's merge (``_driver_compact``).
 
 A fold step costs O(|batch|) and is one Spark job. A per-(key, bucket)
 partial that Spark estimates under ``_DRIVER_APPEND_BYTES`` is
@@ -61,7 +67,9 @@ back to the SAME path in one action. That is safe because the Spark 4
 file-source V2 write stages its output under a job-attempt directory
 and moves files only at job commit, after every read task of the
 action has finished. It is not crash-atomic on a plain filesystem: a
-crash mid-commit can lose the rewritten buckets' standing rows.
+crash mid-commit can lose the rewritten buckets' standing rows. A
+compaction on the driver has the same window: it deletes a bucket's
+old segments just before it publishes the merged one.
 Appends are not at risk. A crashed Spark append leaves only staging
 files. A crashed driver append leaves some of the batch's buckets with
 their new segment and the rest without: each file appears by one
@@ -98,6 +106,7 @@ before the sidecar held a schema) are read with ``mergeSchema``.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -106,11 +115,13 @@ import uuid
 import zlib
 from collections.abc import Callable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -125,6 +136,7 @@ from pyspark.sql.types import (
     MapType,
     ShortType,
     StringType,
+    StructField,
     StructType,
     TimestampType,
 )
@@ -182,14 +194,32 @@ _DRIVER_APPEND_BYTES = 8 << 20
 #: Hadoop's ``file.bytes-per-checksum`` default. A reader takes the
 #: value from each file's header.
 _CRC_CHUNK = 512
+#: driver-read bound, in bytes of a log-structured layout's segment
+#: files on disk: ``read_state`` merges a layout under it on the driver
+#: (see ``read_state``), a larger one with a Spark scan and merge. Taken
+#: from the measured crossover of the two reads
+#: (``scripts/measure_read_crossover.py``: a monoid and a latest-wins
+#: layout of 7 segments × 16 buckets, each read materialised with a
+#: ``noop`` write, four cores; both layouts' bytes, driver vs Spark ms
+#: cold / warm): 0.9 MB 209 / 161 vs 548 / 539; 2.7 MB 239 / 184 vs
+#: 599 / 592; 10 MB 418 / 399 vs 736 / 629; 19 MB 983 / 1,021 vs
+#: 1,506 / 1,255; 29 MB 1,331 / 1,259 vs 1,436 / 1,235; 38 MB 1,283 /
+#: 1,428 vs 1,390 / 1,175; 76 MB 2,853 / 2,959 vs 2,494 / 2,186. The
+#: two layouts split the bytes about evenly, so a layout stops winning
+#: warm at about 14 MB of its own. The bound also caps what one read
+#: holds on the driver, a small multiple of its bytes on disk, so it is
+#: a constant, not a setting.
+_DRIVER_READ_BYTES = 12 << 20
 
 
-def _bucket_file_counts(state_dir: str) -> dict[int, int]:
-    """Per-bucket data-file counts, driver-side (one listdir per bucket
-    directory — the local/HDFS stand-in for a table format's file
-    index). Used only to pick compaction candidates; correctness never
-    depends on it."""
-    out: dict[int, int] = {}
+def _segment_files(state_dir: str) -> dict[int, list[tuple[str, int]]]:
+    """Each bucket's data files as (path, size): one listing of the
+    layout and one of each ``bucket=<i>`` directory (the local/HDFS
+    stand-in for a table format's file index). Hidden names (``.``,
+    ``_``) are skipped, as Spark's listing skips them. The append's
+    compaction choice counts these files; the driver read takes its
+    size check and its file list from them."""
+    out: dict[int, list[tuple[str, int]]] = {}
     if not os.path.isdir(state_dir):
         return out
     for name in os.listdir(state_dir):
@@ -199,11 +229,19 @@ def _bucket_file_counts(state_dir: str) -> dict[int, int]:
             b = int(name.split("=", 1)[1])
         except ValueError:
             continue
-        d = os.path.join(state_dir, name)
-        out[b] = sum(
-            1 for f in os.listdir(d) if not f.startswith(("_", "."))
-        )
+        with os.scandir(os.path.join(state_dir, name)) as it:
+            out[b] = [
+                (e.path, e.stat().st_size)
+                for e in it
+                if not e.name.startswith(("_", ".")) and e.is_file()
+            ]
     return out
+
+
+def _bucket_file_counts(state_dir: str) -> dict[int, int]:
+    """Per-bucket data-file counts (:func:`_segment_files`). Used only
+    to pick compaction candidates; correctness never depends on it."""
+    return {b: len(files) for b, files in _segment_files(state_dir).items()}
 
 
 def _fold_width(s, n_buckets: int) -> int:
@@ -519,7 +557,7 @@ def _merge(doc: dict, df: DataFrame, by=()) -> DataFrame:
 
 
 def _append_segments(
-    s, state_dir: str, part: DataFrame, width: int, merge, touched=None
+    s, state_dir: str, part: DataFrame, width: int, merge, touched=None, counts=None
 ) -> None:
     """Append ``part`` — already routed with ``repartitionById(width,
     "bucket")`` — as one new segment per bucket it holds. A bucket of
@@ -528,9 +566,13 @@ def _append_segments(
     row per key, or rows verbatim for the immutable stores) as ONE
     file. ``touched`` is the exact bucket set of ``part`` when the
     caller knows it; otherwise it is collected, and only when some
-    bucket is at the threshold. The append reads no standing data, so
-    without a compaction due this is one job."""
-    over = {b for b, c in _bucket_file_counts(state_dir).items() if c >= _COMPACT_SEGMENTS}
+    bucket is at the threshold. ``counts`` is the caller's
+    :func:`_bucket_file_counts` of the layout, if it has one. The append
+    reads no standing data, so without a compaction due this is one
+    job."""
+    if counts is None:
+        counts = _bucket_file_counts(state_dir)
+    over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
     if over and touched is None:
         with _fold_confs(s, width):
             part = part.localCheckpoint(eager=True)
@@ -609,13 +651,13 @@ def _collect_partial(s, partial: DataFrame, width: int):
     return table, tuple(sorted(pc.unique(table["bucket"]).to_pylist()))
 
 
-def _hadoop_crc(body) -> bytes:
+def _hadoop_crc(body, chunk: int = _CRC_CHUNK) -> bytes:
     """The ``.crc`` file Hadoop's checksummed local filesystem keeps
     beside a data file and verifies on every read: ``crc\\0``, the bytes
-    per checksum, then the big-endian CRC32 of each chunk."""
+    per checksum (``chunk``), then the big-endian CRC32 of each chunk."""
     view = memoryview(body)
-    sums = [zlib.crc32(view[i : i + _CRC_CHUNK]) for i in range(0, len(view), _CRC_CHUNK)]
-    return b"crc\0" + struct.pack(f">i{len(sums)}I", _CRC_CHUNK, *sums)
+    sums = [zlib.crc32(view[i : i + chunk]) for i in range(0, len(view), chunk)]
+    return b"crc\0" + struct.pack(f">i{len(sums)}I", chunk, *sums)
 
 
 def _publish(path: str, body, mode: int) -> None:
@@ -629,14 +671,37 @@ def _publish(path: str, body, mode: int) -> None:
     os.replace(tmp, path)
 
 
-def _write_segments(s, state_dir: str, table, buckets) -> None:
+def _dictionary_columns(segment) -> list[str]:
+    """The columns of a driver-written segment worth dictionary
+    encoding: atomic ones whose distinct values are at most half the
+    segment's rows, as parquet-mr keeps a dictionary only where it is
+    smaller. Per 20k-row ``keyed_state_fold`` batch (16 segments,
+    snappy): monoid partials 157,884 bytes plain, 188,789 with every
+    column encoded, 156,142 with this rule (``_b`` only); latest-wins
+    winners 153,444, 184,075 and 153,444 (none: a segment's ``ts`` is
+    mostly distinct); partials of small counts (values in ±100) 69,175,
+    73,981 and 65,835. Judged per segment, not per batch: a column with
+    few distinct values in the batch can still be mostly distinct in
+    each bucket's share."""
+    return [
+        f.name
+        for f in segment.schema
+        if not pa.types.is_nested(f.type)
+        and 2 * pc.count_distinct(segment[f.name]).as_py() <= segment.num_rows
+    ]
+
+
+def _write_segments(s, state_dir: str, table, buckets, replace=None) -> None:
     """Append one parquet segment per bucket in ``buckets`` from the
     driver: the rows of ``table`` in that bucket, ``bucket`` dropped,
-    as ``bucket=<b>/part-…parquet``. Each file is laid down the way
-    Spark's write through the local filesystem would leave it: no
-    dictionary encoding (with pyarrow's default one, the latest-wins
-    segments of a 20k-row batch of mostly unique longs came out 17%
-    larger than Spark's, without it 3% smaller), snappy, a Hadoop
+    as ``bucket=<b>/part-…parquet``. ``replace`` maps a bucket to the
+    data files its new segment replaces (a compaction): they and their
+    ``.crc`` files are deleted once the segment is encoded, just before
+    it is published. Each file is laid down the way
+    Spark's write through the local filesystem would leave it:
+    dictionary encoding only for a column whose distinct values in the
+    segment are at most half its rows (:func:`_dictionary_columns`),
+    snappy, a Hadoop
     ``.crc`` beside it (:func:`_hadoop_crc`), and Hadoop's modes under
     the configured ``fs.permissions.umask-mode``, not the process umask.
     The ``.crc`` is renamed into place before its data file, so a listed
@@ -665,15 +730,20 @@ def _write_segments(s, state_dir: str, table, buckets) -> None:
             if not os.path.isdir(d):
                 os.makedirs(d)
                 os.chmod(d, 0o777 & ~umask)
+            segment = data.slice(offset, n)
             sink = pa.BufferOutputStream()
             pq.write_table(
-                data.slice(offset, n),
+                segment,
                 sink,
                 compression="snappy",
-                use_dictionary=False,
+                use_dictionary=_dictionary_columns(segment),
                 store_schema=False,
             )
             body = sink.getvalue()
+            for old in (replace or {}).get(b, ()):
+                os.remove(old)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(d, f".{os.path.basename(old)}.crc"))
             name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
             _publish(os.path.join(d, f".{name}.crc"), _hadoop_crc(body), 0o666 & ~umask)
             _publish(os.path.join(d, name), body, 0o666 & ~umask)
@@ -681,25 +751,79 @@ def _write_segments(s, state_dir: str, table, buckets) -> None:
 
 
 def _driver_append(
-    s, state_dir: str, table, buckets, schema: StructType, width: int, merge
+    s, state_dir: str, table, buckets, schema: StructType, width: int, layout: dict
 ) -> None:
     """Append the collected partial ``table`` (``schema``) as one new
-    segment per bucket in ``buckets``, from the driver. A bucket at the
-    compaction threshold gets ``_append_segments``' compaction instead,
-    fed the collected rows, so the batch is never evaluated again."""
-    counts = _bucket_file_counts(state_dir)
+    segment per bucket in ``buckets``, from the driver. Buckets at the
+    compaction threshold are compacted on the driver when
+    :func:`_driver_compact` can; otherwise they get
+    ``_append_segments``' compaction with ``layout``'s merge, fed the
+    collected rows, so the batch is never evaluated again."""
+    segments = _segment_files(state_dir)
+    counts = {b: len(files) for b, files in segments.items()}
     compact = [b for b in buckets if counts.get(b, 0) >= _COMPACT_SEGMENTS]
     _write_segments(s, state_dir, table, [b for b in buckets if b not in compact])
-    if compact:
+    if compact and not _driver_compact(s, state_dir, table, compact, segments, schema, layout):
         rows = table.filter(pc.is_in(table["bucket"], pa.array(compact, pa.int32())))
         _append_segments(
             s,
             state_dir,
-            s.createDataFrame(rows, schema).repartitionById(width, "bucket"),
+            _arrow_frame(s, rows, schema).repartitionById(width, "bucket"),
             width,
-            merge,
+            lambda df: _merge(layout, df, ("bucket",)),
             tuple(compact),
+            counts,
         )
+
+
+def _driver_compact(s, state_dir: str, table, compact, segments, schema, layout) -> bool:
+    """Compact each bucket in ``compact`` on the driver: its segments
+    (``segments``, checked against their ``.crc``) and its rows of the
+    collected partial ``table``, read through the batch's ``schema`` as
+    the Spark compaction reads them, merged per key with ``layout``'s
+    merge in Arrow (a monoid keeps each key's max ``_b``, so the
+    bucket's fence stays where it was), and written as one segment that
+    replaces them. False, with nothing written, where the merge is not
+    one the driver does exactly (:func:`_driver_mergeable`), the
+    buckets' segments total ``_DRIVER_READ_BYTES`` or more, or the
+    Arrow read or merge gives way to Spark's.
+
+    Like the Spark compaction's overwrite commit, it is not
+    crash-atomic: a bucket's old segments are deleted just before its
+    new one is published, and a crash in between loses that bucket's
+    standing rows (see the module docstring). On four cores the
+    ``keyed_state_fold`` step that compacts all 16 buckets of both
+    layouts took 3.8-4.1 s with the Spark compaction and takes
+    0.5-0.75 s this way."""
+    fields = [StructField(f.name, f.dataType, True) for f in schema if f.name != "bucket"]
+    files = {b: segments.get(b, []) for b in compact}
+    if not _driver_mergeable(layout, fields) or sum(
+        n for fs in files.values() for _p, n in fs
+    ) >= _DRIVER_READ_BYTES:
+        return False
+    try:
+        rows = table.drop_columns(["bucket"]).cast(to_arrow_schema(StructType(fields)))
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return False
+    merged = []
+    for b in compact:
+        standing = _read_segments(files[b], fields)
+        if standing is None:
+            return False
+        m = _driver_merge(
+            layout, pa.concat_tables([standing, rows.filter(pc.equal(table["bucket"], b))])
+        )
+        if m is None:
+            return False
+        merged.append(m.append_column("bucket", pa.array([b] * m.num_rows, pa.int32())))
+    _write_segments(
+        s,
+        state_dir,
+        pa.concat_tables(merged),
+        compact,
+        {b: [p for p, _n in fs] for b, fs in files.items()},
+    )
+    return True
 
 
 def bucketed_latest_fold(
@@ -865,13 +989,9 @@ def bucketed_latest_fold(
             if touched is not None and not touched:
                 return  # empty batch (e.g. a no-data trigger): no-op
             _stamp_sidecar(s, state_dir, layout, rows.schema)
-
-            def merge(df):
-                return _latest_winners(df, key, order_cols, ("bucket",))
-
             if table is not None:
                 _driver_append(
-                    s, state_dir, table, touched, winners.schema, width, merge
+                    s, state_dir, table, touched, winners.schema, width, layout
                 )
             else:
                 _append_segments(
@@ -879,7 +999,7 @@ def bucketed_latest_fold(
                     state_dir,
                     winners.repartitionById(width, "bucket"),
                     width,
-                    merge,
+                    lambda df: _merge(layout, df, ("bucket",)),
                     touched,
                 )
             return
@@ -1180,7 +1300,7 @@ def bucketed_monoid_fold(
                 _append(s, partial, todo, width)
             else:
                 _driver_append(
-                    s, state_dir, table, todo, partial.schema, width, merge
+                    s, state_dir, table, todo, partial.schema, width, layout
                 )
         frontier[0] = committed
 
@@ -1282,6 +1402,204 @@ def compact_expired_tombstones(
     return dirty
 
 
+#: Spark types a pyarrow hash group and sort treat as Spark's grouping
+#: and ordering do, so a key or a latest-wins order column of one of
+#: them is merged on the driver. Floating point is not among them
+#: (Spark groups -0.0 with 0.0 and orders NaN above every number), nor
+#: are nested types or strings under a collation other than binary.
+_DRIVER_KEY_TYPES = (
+    BooleanType,
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    DecimalType,
+    StringType,
+    BinaryType,
+    DateType,
+    TimestampType,
+)
+#: monoid ops a pyarrow hash aggregate computes exactly as Spark's: NULL
+#: is "no contribution", and sums run in decimal128(38, 0), so a total
+#: outside the range of a long is seen rather than wrapped
+_DRIVER_OPS = ("sum", "min", "max")
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _driver_mergeable(doc: dict, fields) -> bool:
+    """Whether the driver merges rows of ``fields`` with ``doc``'s
+    merge exactly as Spark does: the key, and a latest-wins layout's
+    order columns, are of ``_DRIVER_KEY_TYPES`` (strings under the
+    binary collation) and every latest-wins column round-trips through
+    Arrow (:func:`_round_trips`); a monoid's ops are ``_DRIVER_OPS``
+    over longs."""
+    types = {f.name: f.dataType for f in fields}
+
+    def exact(c) -> bool:
+        t = types.get(c)
+        return isinstance(t, _DRIVER_KEY_TYPES) and (
+            not isinstance(t, StringType) or t.collation == "UTF8_BINARY"
+        )
+
+    if not exact(doc["key"]):
+        return False
+    if "order" in doc:
+        return all(exact(c) for c in doc["order"]) and all(
+            _round_trips(t) for t in types.values()
+        )
+    return all(
+        op in _DRIVER_OPS and isinstance(types.get(c), LongType)
+        for c, op in doc["cols"].items()
+    )
+
+
+def _driver_fields(doc: dict) -> list[StructField] | None:
+    """The columns ``read_state`` returns for a log-structured layout
+    the driver merges (:func:`_driver_mergeable`), in the Spark merge's
+    order and types; None for every other layout. Latest-wins keeps
+    every recorded column but ``bucket``; a monoid keeps its key and
+    state columns."""
+    if "schema" not in doc:
+        return None
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in StructType.fromJson(doc["schema"]).fields
+        if f.name != "bucket"
+    ]
+    if not _driver_mergeable(doc, fields):
+        return None
+    if "order" in doc:
+        return fields
+    key = doc["key"]
+    types = {f.name: f.dataType for f in fields}
+    return [StructField(key, types[key], True)] + [
+        StructField(c, LongType(), True) for c in doc["cols"]
+    ]
+
+
+def _verify_crc(path: str, body: bytes) -> None:
+    """Check a data file against the ``.crc`` beside it, as Hadoop's
+    checksummed filesystem does on every read: a file without one, or
+    with a header that is not a checksum file's, is read unchecked; a
+    mismatch raises."""
+    d, name = os.path.split(path)
+    try:
+        with open(os.path.join(d, f".{name}.crc"), "rb") as f:
+            crc = f.read()
+    except FileNotFoundError:
+        return
+    if crc[:4] != b"crc\0" or len(crc) < 8:
+        return
+    chunk = struct.unpack(">i", crc[4:8])[0]
+    if chunk > 0 and _hadoop_crc(body, chunk) != crc:
+        raise OSError(
+            f"org.apache.hadoop.fs.ChecksumException: Checksum error: file:{path}"
+        )
+
+
+def _read_segments(files, fields: list[StructField]):
+    """Every row of ``files`` as one Arrow table through ``fields``: each
+    file's bytes checked against its ``.crc``, parsed by pyarrow, a
+    column it lacks filled with NULL and every column cast to its
+    recorded type. None where a file holds what Spark reads otherwise
+    than pyarrow (dates or INT96 timestamps Spark rebased from the
+    Julian calendar) or a column does not cast."""
+    target = to_arrow_schema(StructType(fields))
+    parts = []
+    for path, _size in files:
+        with open(path, "rb") as f:
+            body = f.read()
+        _verify_crc(path, body)
+        pf = pq.ParquetFile(pa.BufferReader(body), coerce_int96_timestamp_unit="us")
+        if any(k.startswith(b"org.apache.spark.legacy") for k in pf.metadata.metadata or {}):
+            return None
+        present = set(pf.schema_arrow.names)
+        got = pf.read(columns=[n for n in target.names if n in present], use_threads=False)
+        try:
+            parts.append(
+                pa.Table.from_arrays(
+                    [
+                        got[f.name].cast(f.type)
+                        if f.name in present
+                        else pa.nulls(got.num_rows, f.type)
+                        for f in target
+                    ],
+                    schema=target,
+                )
+            )
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+            return None
+    return pa.concat_tables(parts) if parts else target.empty_table()
+
+
+def _driver_merge(doc: dict, table):
+    """``table`` folded to one row per key with the sidecar's merge, in
+    Arrow, or None where only Spark's own overflow rule can give the
+    answer (a sum past the range of a long)."""
+    key = doc["key"]
+    if "order" in doc:
+        # latest-wins: Spark's struct ordering puts NULL below every
+        # value, so descending it is NULLS LAST; the first row of each
+        # key is its winner
+        table = table.take(
+            pc.sort_indices(
+                table,
+                sort_keys=[(key, "ascending")] + [(c, "descending") for c in doc["order"]],
+                null_placement="at_end",
+            )
+        )
+        pos = pa.table({key: table[key], "_p": np.arange(table.num_rows, dtype=np.int64)})
+        return table.take(pos.group_by(key, use_threads=False).aggregate([("_p", "min")])["_p_min"])
+    # a monoid; compaction keeps each key's max _b, the fence
+    aggs = [*doc["cols"].items(), *([("_b", "max")] if "_b" in table.column_names else [])]
+    for c, op in aggs:
+        if op == "sum":
+            i = table.schema.get_field_index(c)
+            table = table.set_column(i, c, table[c].cast(pa.decimal128(38, 0)))
+    g = table.group_by(key).aggregate(aggs)
+    out = {key: g[key]}
+    for c, op in aggs:
+        v = g[f"{c}_{op}"]
+        if op == "sum":
+            span = pc.min_max(v).as_py()
+            if span["min"] is not None and (span["min"] < _LONG_MIN or span["max"] > _LONG_MAX):
+                return None
+            v = v.cast(pa.int64())
+        out[c] = v
+    return pa.Table.from_arrays([out[n] for n in table.column_names], names=table.column_names)
+
+
+def _arrow_frame(spark, table, schema: StructType) -> DataFrame:
+    """``table`` as a DataFrame of ``schema``, handed to the JVM as one
+    Arrow batch per core and decoded by the tasks that read it. Under
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark would
+    make a local relation instead, decoding every row on the driver and
+    shipping the rows inside the tasks: to create and materialise 132k
+    merged state rows on four cores, 490-570 ms that way against 70-80
+    ms this way."""
+    step = max(1, -(-table.num_rows // spark.sparkContext.defaultParallelism))
+    table = pa.Table.from_batches(table.combine_chunks().to_batches(step), table.schema)
+    with pinned_confs(spark, {"spark.sql.execution.arrow.localRelationThreshold": "0"}):
+        return spark.createDataFrame(table, schema)
+
+
+def _driver_read(spark, state_dir: str, doc: dict) -> DataFrame | None:
+    """``read_state`` of a small log-structured layout, merged on the
+    driver (see ``read_state``), or None for the Spark read."""
+    fields = _driver_fields(doc)
+    if fields is None:
+        return None
+    files = [f for fs in _segment_files(state_dir).values() for f in fs]
+    if sum(size for _path, size in files) >= _DRIVER_READ_BYTES:
+        return None
+    table = _read_segments(files, fields)
+    if table is not None:
+        table = _driver_merge(doc, table)
+    if table is None:
+        return None
+    return _arrow_frame(spark, table, StructType(fields))
+
+
 def read_state(spark, state_dir: str) -> DataFrame:
     """The maintained table, one row per key, layout/fencing columns
     dropped (bucket and _b are implementation details, not part of the
@@ -1297,8 +1615,36 @@ def read_state(spark, state_dir: str) -> DataFrame:
     exactly as in the fold. Layouts without a sidecar (immutable and
     index stores, one row per key) are read as they are, merging
     footers.
+
+    A small layout is merged on the driver: one whose sidecar records
+    its schema, whose segment files (one listing, hidden names skipped
+    as Spark skips them) total under ``_DRIVER_READ_BYTES`` on disk,
+    whose key is of a type pyarrow groups and sorts as Spark does
+    (``_DRIVER_KEY_TYPES``; so are latest-wins order columns, and every
+    latest-wins column round-trips through Arrow) and whose monoid ops
+    are ``sum``, ``min`` and ``max``. Every segment's bytes are read and
+    checked against the ``.crc`` beside them, as Hadoop's checksummed
+    filesystem checks them; a mismatch raises an error naming
+    ``ChecksumException`` and the file. The segments are parsed by
+    pyarrow through the sidecar's union schema and merged in Arrow:
+    monoid sums in decimal128(38, 0), with the Spark read taken instead
+    when a total leaves the range of a long, so the session's own
+    overflow rule applies; latest-wins sorts by key, then the order
+    columns descending with NULLs last (Spark's struct order puts NULL
+    lowest), and keeps each key's first row. The result is a
+    ``createDataFrame`` of the merged rows with the Spark read's
+    columns and types: one job and no file opened by Spark when it is
+    materialised. Local filesystem only, like the driver append.
+
+    Snapshot: both reads take the layout's file list when the read is
+    built. The Spark read opens the files when the frame runs; the
+    driver read has read them by the time it returns.
     """
     doc = _read_sidecar(state_dir)
+    if doc is not None:
+        small = _driver_read(spark, state_dir, doc)
+        if small is not None:
+            return small
     df = _scan(spark, state_dir, doc).drop("bucket")
     if doc is not None:
         return _merge(doc, df)

@@ -11,7 +11,9 @@ The claims these pin:
   stock filesystem forks ``chmod`` per created file and directory and
   ``readlink`` per rename: about 57 processes per 16-bucket fold);
 - the committed jar is what its committed source compiles to;
-- ``build_spark`` returns a live session without touching its confs.
+- ``build_spark`` returns a live session without touching its confs;
+- a built session captures no PySpark call sites, unless ``extra_conf``
+  turns the capture back on.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from hailstorm_spark.session import _LOCALFS_JAR, build_spark
+from hailstorm_spark.session import _LOCALFS_JAR, build_spark, session_conf
 from hailstorm_spark.streaming.bolt import streaming_word_counts
 from hailstorm_spark.streaming.sinks import topk_file_sink
 from hailstorm_spark.streaming.sources import file_lines_stream
@@ -237,3 +239,10 @@ def test_build_spark_leaves_a_live_session_alone(spark):
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def test_built_sessions_capture_no_call_sites(spark):
+    flag = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(flag) == "false"
+    assert session_conf()[flag] == "false"
+    assert session_conf(extra_conf={flag: "true"})[flag] == "true"
