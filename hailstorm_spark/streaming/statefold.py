@@ -22,15 +22,17 @@ LOG of per-key partials merged on read:
 3. ``read_state`` merges each key's segments with the same op, driven
    by the ``_monoid.json`` sidecar the folds stamp (key, merge, union
    schema). A layout whose segment files total under
-   ``_DRIVER_READ_BYTES``, and whose key and merge pyarrow does
+   ``_DRIVER_READ_BYTES`` on disk and decode to at most
+   ``_DRIVER_DECODED_BYTES``, and whose key and merge pyarrow does
    exactly, is read and merged on the driver: each file checked
    against its Hadoop ``.crc``, parsed by pyarrow and merged in Arrow,
    one Spark job to materialise instead of a scan and an exchange.
    Others take a Spark scan and merge;
 4. a touched bucket whose segment count reaches ``_COMPACT_SEGMENTS``
    is merged down to one row per key by the batch that touches it, so
-   read fan-in stays bounded. A driver-appended batch compacts small
-   buckets on the driver with the read's merge (``_driver_compact``).
+   read fan-in stays bounded. A driver-appended batch compacts buckets
+   whose segments total under ``_DRIVER_COMPACT_BYTES`` on the driver
+   with the read's merge (``_driver_compact``).
 
 A fold step costs O(|batch|) and is one Spark job. A per-(key, bucket)
 partial that Spark estimates under ``_DRIVER_APPEND_BYTES`` is
@@ -68,8 +70,9 @@ file-source V2 write stages its output under a job-attempt directory
 and moves files only at job commit, after every read task of the
 action has finished. It is not crash-atomic on a plain filesystem: a
 crash mid-commit can lose the rewritten buckets' standing rows. A
-compaction on the driver has the same window: it deletes a bucket's
-old segments just before it publishes the merged one.
+compaction on the driver has the same window and no wider: it writes
+the merged segment and its ``.crc`` under hidden names, then deletes
+the bucket's old segments and renames the two into place.
 Appends are not at risk. A crashed Spark append leaves only staging
 files. A crashed driver append leaves some of the batch's buckets with
 their new segment and the rest without: each file appears by one
@@ -206,10 +209,38 @@ _CRC_CHUNK = 512
 #: 1,506 / 1,255; 29 MB 1,331 / 1,259 vs 1,436 / 1,235; 38 MB 1,283 /
 #: 1,428 vs 1,390 / 1,175; 76 MB 2,853 / 2,959 vs 2,494 / 2,186. The
 #: two layouts split the bytes about evenly, so a layout stops winning
-#: warm at about 14 MB of its own. The bound also caps what one read
-#: holds on the driver, a small multiple of its bytes on disk, so it is
-#: a constant, not a setting.
+#: warm at about 14 MB of its own. What the read holds on the driver is
+#: capped by ``_DRIVER_DECODED_BYTES``, not by this bound.
 _DRIVER_READ_BYTES = 12 << 20
+#: decoded-size cap of a driver read or compaction, in Arrow bytes of
+#: the segments it has parsed: past it the read gives way to Spark's,
+#: having held at most one file more than the cap. Bytes on disk do not
+#: bound it: the layouts ``_DRIVER_READ_BYTES`` was measured on (longs,
+#: mostly distinct) decode to 1.5-1.6 times their bytes on disk (1.37
+#: MB to 2.0 MB, 5.0 MB to 8.0 MB, 10.0 MB to 16.1 MB per layout), but a
+#: latest-wins layout whose payload is one of eight 40-character
+#: strings decodes to 4.9 times (1.7 MB to 8.5 MB;
+#: ``scripts/measure_read_crossover.py``). The cap is what the measured
+#: layouts decode to at ``_DRIVER_READ_BYTES``, so the driver never
+#: takes on more rows than the crossover covered; a layout that
+#: compresses better reads through Spark from fewer bytes on disk.
+_DRIVER_DECODED_BYTES = 20 << 20
+#: driver-compaction bound, in bytes on disk of the segments one fold
+#: call compacts: a driver-appended batch compacts its buckets at the
+#: threshold on the driver under it (:func:`_driver_compact`), on Spark
+#: over it. Taken from the measured crossover of the two compactions
+#: (``scripts/measure_read_crossover.py --compact``: the fold call of a
+#: 20k-row batch that compacts all 16 buckets of a layout of 8 segments,
+#: median of 3, four cores; bytes compacted, driver vs Spark ms, monoid /
+#: latest-wins): 0.54 / 0.51 MB 277 / 292 vs 779 / 802; 1.6 / 1.6 MB
+#: 257 / 283 vs 711 / 821; 5.8 / 5.6 MB 409 / 415 vs 856 / 920; 8.6 /
+#: 8.2 MB 452 / 544 vs 1,177 / 1,167; 11.4 / 10.8 MB 588 / 587 vs 987 /
+#: 1,136; 14.2 / 13.3 MB 731 / 685 vs 1,105 / 1,413; 17.0 / 15.9 MB
+#: 1,418 / 711 vs 1,065 / 1,354; 19.9 / 18.5 MB 1,566 / 738 vs 1,150 /
+#: 1,349; 22.7 / 21.1 MB 1,502 / 1,852 vs 1,204 / 1,455. The monoid
+#: compaction stops winning between 14 and 17 MB, so the bound sits
+#: below the largest size where both won.
+_DRIVER_COMPACT_BYTES = 12 << 20
 
 
 def _segment_files(state_dir: str) -> dict[int, list[tuple[str, int]]]:
@@ -660,15 +691,20 @@ def _hadoop_crc(body, chunk: int = _CRC_CHUNK) -> bytes:
     return b"crc\0" + struct.pack(f">i{len(sums)}I", chunk, *sums)
 
 
-def _publish(path: str, body, mode: int) -> None:
-    """Write ``body`` under a hidden name (Spark's listing skips it),
-    give it ``mode``, and rename it to ``path``."""
+def _stage(path: str, body, mode: int) -> str:
+    """Write ``body`` under a hidden name beside ``path`` (Spark's
+    listing skips it) and give it ``mode``; returns the hidden name."""
     d, name = os.path.split(path)
     tmp = os.path.join(d, f".{name}.tmp")
     with open(tmp, "wb") as f:
         f.write(body)
     os.chmod(tmp, mode)
-    os.replace(tmp, path)
+    return tmp
+
+
+def _publish(path: str, body, mode: int) -> None:
+    """Write ``body`` under a hidden name and rename it to ``path``."""
+    os.replace(_stage(path, body, mode), path)
 
 
 def _dictionary_columns(segment) -> list[str]:
@@ -695,9 +731,11 @@ def _write_segments(s, state_dir: str, table, buckets, replace=None) -> None:
     """Append one parquet segment per bucket in ``buckets`` from the
     driver: the rows of ``table`` in that bucket, ``bucket`` dropped,
     as ``bucket=<b>/part-…parquet``. ``replace`` maps a bucket to the
-    data files its new segment replaces (a compaction): they and their
-    ``.crc`` files are deleted once the segment is encoded, just before
-    it is published. Each file is laid down the way
+    data files its new segment replaces (a compaction): the new segment
+    and its ``.crc`` are written under hidden names first, then the old
+    files and their ``.crc`` are deleted and the two new ones renamed
+    into place, so a crash loses standing rows only between a delete and
+    a rename, as in Spark's overwrite commit. Each file is laid down the way
     Spark's write through the local filesystem would leave it:
     dictionary encoding only for a column whose distinct values in the
     segment are at most half its rows (:func:`_dictionary_columns`),
@@ -740,13 +778,22 @@ def _write_segments(s, state_dir: str, table, buckets, replace=None) -> None:
                 store_schema=False,
             )
             body = sink.getvalue()
-            for old in (replace or {}).get(b, ()):
-                os.remove(old)
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(d, f".{os.path.basename(old)}.crc"))
             name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
-            _publish(os.path.join(d, f".{name}.crc"), _hadoop_crc(body), 0o666 & ~umask)
-            _publish(os.path.join(d, name), body, 0o666 & ~umask)
+            crc_path, path = os.path.join(d, f".{name}.crc"), os.path.join(d, name)
+            if replace and b in replace:
+                staged = [
+                    (_stage(crc_path, _hadoop_crc(body), 0o666 & ~umask), crc_path),
+                    (_stage(path, body, 0o666 & ~umask), path),
+                ]
+                for old in replace[b]:
+                    os.remove(old)
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(d, f".{os.path.basename(old)}.crc"))
+                for tmp, dst in staged:
+                    os.replace(tmp, dst)
+            else:
+                _publish(crc_path, _hadoop_crc(body), 0o666 & ~umask)
+                _publish(path, body, 0o666 & ~umask)
         offset += n
 
 
@@ -785,30 +832,33 @@ def _driver_compact(s, state_dir: str, table, compact, segments, schema, layout)
     bucket's fence stays where it was), and written as one segment that
     replaces them. False, with nothing written, where the merge is not
     one the driver does exactly (:func:`_driver_mergeable`), the
-    buckets' segments total ``_DRIVER_READ_BYTES`` or more, or the
-    Arrow read or merge gives way to Spark's.
+    buckets' segments total ``_DRIVER_COMPACT_BYTES`` or more on disk or
+    decode to more than ``_DRIVER_DECODED_BYTES``, or the Arrow read or
+    merge gives way to Spark's.
 
     Like the Spark compaction's overwrite commit, it is not
-    crash-atomic: a bucket's old segments are deleted just before its
-    new one is published, and a crash in between loses that bucket's
-    standing rows (see the module docstring). On four cores the
-    ``keyed_state_fold`` step that compacts all 16 buckets of both
-    layouts took 3.8-4.1 s with the Spark compaction and takes
-    0.5-0.75 s this way."""
+    crash-atomic: both new files are written under hidden names first,
+    and a crash after a bucket's old segments are deleted and before the
+    new ones are renamed into place loses that bucket's standing rows
+    (see the module docstring)."""
     fields = [StructField(f.name, f.dataType, True) for f in schema if f.name != "bucket"]
     files = {b: segments.get(b, []) for b in compact}
     if not _driver_mergeable(layout, fields) or sum(
         n for fs in files.values() for _p, n in fs
-    ) >= _DRIVER_READ_BYTES:
+    ) >= _DRIVER_COMPACT_BYTES:
         return False
     try:
         rows = table.drop_columns(["bucket"]).cast(to_arrow_schema(StructType(fields)))
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
         return False
     merged = []
+    decoded = 0
     for b in compact:
         standing = _read_segments(files[b], fields)
         if standing is None:
+            return False
+        decoded += standing.nbytes
+        if decoded > _DRIVER_DECODED_BYTES:
             return False
         m = _driver_merge(
             layout, pa.concat_tables([standing, rows.filter(pc.equal(table["bucket"], b))])
@@ -1506,6 +1556,7 @@ def _read_segments(files, fields: list[StructField]):
     Julian calendar) or a column does not cast."""
     target = to_arrow_schema(StructType(fields))
     parts = []
+    decoded = 0
     for path, _size in files:
         with open(path, "rb") as f:
             body = f.read()
@@ -1528,6 +1579,9 @@ def _read_segments(files, fields: list[StructField]):
                 )
             )
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+            return None
+        decoded += parts[-1].nbytes
+        if decoded > _DRIVER_DECODED_BYTES:
             return None
     return pa.concat_tables(parts) if parts else target.empty_table()
 
@@ -1618,7 +1672,8 @@ def read_state(spark, state_dir: str) -> DataFrame:
 
     A small layout is merged on the driver: one whose sidecar records
     its schema, whose segment files (one listing, hidden names skipped
-    as Spark skips them) total under ``_DRIVER_READ_BYTES`` on disk,
+    as Spark skips them) total under ``_DRIVER_READ_BYTES`` on disk and
+    decode to at most ``_DRIVER_DECODED_BYTES`` in Arrow,
     whose key is of a type pyarrow groups and sorts as Spark does
     (``_DRIVER_KEY_TYPES``; so are latest-wins order columns, and every
     latest-wins column round-trips through Arrow) and whose monoid ops

@@ -16,9 +16,13 @@ read of the same files (the bound patched to 0):
   same session;
 - a materialised driver read is one Spark job and opens no file
   through Spark;
-- a driver-appended batch compacts its buckets on the driver, to the
-  same state and layout as the Spark compaction, and keeps the monoid
-  fence.
+- the read gives way to Spark's past its bound on segment bytes, and
+  past ``_DRIVER_DECODED_BYTES`` of decoded Arrow data;
+- a driver-appended batch compacts its buckets on the driver under
+  ``_DRIVER_COMPACT_BYTES``, to the same state and layout as the Spark
+  compaction, and keeps the monoid fence;
+- a driver compaction that fails while writing its files leaves the
+  bucket's old segments in place.
 
 Batches come both as parquet files read back (the driver append writes
 their segments) and as ``createDataFrame`` frames (Spark writes them),
@@ -244,10 +248,27 @@ def _data_files(d: str) -> dict[str, tuple[int, int]]:
     }
 
 
+def test_the_read_gives_way_past_the_decoded_cap(spark, tmp_path, monkeypatch):
+    d = str(tmp_path / "latest")
+    fold = bucketed_latest_fold(d, key="key", order_cols=("ts",), n_buckets=B)
+    t = pa.table({"key": pa.array(range(400), pa.int64()), "ts": pa.array(range(400), pa.int64()),
+                  "payload": pa.array(["x" * 500] * 400)})
+    fold(_parquet(spark, tmp_path, "p0", t), 0)
+    files = [f for fs in statefold._segment_files(d).values() for f in fs]
+    disk = sum(n for _p, n in files)
+    decoded = statefold._read_segments(files, statefold._driver_fields(statefold._read_sidecar(d)))
+    # repeated strings: far more bytes in Arrow than on disk
+    assert decoded.nbytes > 10 * disk
+    monkeypatch.setattr(statefold, "_DRIVER_DECODED_BYTES", decoded.nbytes - 1)
+    assert read_state(spark, d).inputFiles()
+    monkeypatch.setattr(statefold, "_DRIVER_DECODED_BYTES", decoded.nbytes)
+    assert read_state(spark, d).inputFiles() == []
+
+
 @pytest.mark.parametrize("path", ["driver", "spark"])
 def test_compaction_on_both_paths(spark, tmp_path, monkeypatch, path):
     if path == "spark":
-        monkeypatch.setattr(statefold, "_DRIVER_READ_BYTES", 0)
+        monkeypatch.setattr(statefold, "_DRIVER_COMPACT_BYTES", 0)
     monkeypatch.setattr(statefold, "_COMPACT_SEGMENTS", 3)
     md, ld = str(tmp_path / "monoid"), str(tmp_path / "latest")
 
@@ -286,3 +307,36 @@ def test_compaction_on_both_paths(spark, tmp_path, monkeypatch, path):
         monoid, _latest = folds()
         monoid(inputs[i].select("key", "s", "mx"), i)
     assert _data_files(md) == snap
+
+
+def test_a_failed_driver_compaction_keeps_the_old_segments(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(statefold, "_COMPACT_SEGMENTS", 2)
+    d = str(tmp_path / "monoid")
+    fold = bucketed_monoid_fold(d, key="key", cols={"s": "sum"}, n_buckets=1, epoch="e")
+    batches = []
+    for i in range(3):
+        keys = pa.array(range(i, i + 5), pa.int64())
+        batches.append(_parquet(spark, tmp_path, f"f{i}", pa.table({"key": keys, "s": keys})))
+    for i in range(2):
+        fold(batches[i], i)
+    before = _data_files(d)
+    want = _rows(read_state(spark, d))
+    real = statefold._stage
+
+    def stage(path, body, mode):
+        if not os.path.basename(path).startswith("."):
+            raise OSError("disk full")
+        return real(path, body, mode)
+
+    monkeypatch.setattr(statefold, "_stage", stage)
+    with pytest.raises(OSError, match="disk full"):
+        fold(batches[2], 2)
+    # the compacted segment never landed; the standing ones were kept
+    assert _data_files(d) == before
+    assert _rows(read_state(spark, d)) == want
+    monkeypatch.setattr(statefold, "_stage", real)
+    fold(batches[2], 2)
+    assert len(_data_files(d)) == 1
+    assert dict(_rows(read_state(spark, d))) == {
+        k: k * sum(1 for i in range(3) if i <= k < i + 5) for k in range(7)
+    }
